@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 
 /** Benchmark entrypoint. Prints ONE compact JSON summary line on stdout
   * (the driver captures only the last ~2 KB of output, so the line must
@@ -884,7 +885,7 @@ object Bench {
         val ok =
           try { fn(spark, sfDir).write.mode("overwrite").format("noop").save(); true }
           catch {
-            case e: Throwable =>
+            case NonFatal(e) =>
               System.err.println(s"[bench] $name FAILED: ${e.getClass.getSimpleName}: ${e.getMessage}")
               false
           }
@@ -972,7 +973,11 @@ object Bench {
             (System.nanoTime() - t0) / 1000000L
           }.sorted.apply(1)
           SlowDetail(constructMs, builds, w)
-        } catch { case _: Throwable => SlowDetail(-1L, Nil, -1L) }
+        } catch {
+          case NonFatal(e) =>
+            System.err.println(s"[bench] $name slow-query detail FAILED: ${e.getClass.getName}: ${e.getMessage}")
+            SlowDetail(-1L, Nil, -1L)
+        }
       name -> d
     }.toMap
     graft.ops.Caches.invalidate()
@@ -1000,7 +1005,11 @@ object Bench {
         val t0 = System.nanoTime()
         val ms =
           try { f().write.mode("overwrite").format("noop").save(); (System.nanoTime() - t0) / 1000000L }
-          catch { case _: Throwable => -1L }
+          catch {
+            case NonFatal(e) =>
+              System.err.println(s"[bench] build $n FAILED: ${e.getClass.getName}: ${e.getMessage}")
+              -1L
+          }
         s""""$n":$ms"""
       }.mkString("{", ",", "}")
     graft.ops.Caches.invalidate()
@@ -1042,7 +1051,11 @@ object Bench {
           pairs.write.mode("overwrite").format("noop").save()
           val warm = s""""warm":{"ms":${(System.nanoTime() - tw0) / 1000000L},"gc_ms":${gcMs() - gw0}}"""
           (s""""construct_ms":$constructMs""" +: stages :+ warm).mkString("{", ",", "}")
-        } catch { case _: Throwable => "null" }
+        } catch {
+          case NonFatal(e) =>
+            System.err.println(s"[bench] q42 stage decomposition FAILED: ${e.getClass.getName}: ${e.getMessage}")
+            "null"
+        }
       }
     graft.ops.Caches.invalidate()
     // Codegen/planning overhead estimate: a NO-shared-build query timed
@@ -1060,7 +1073,11 @@ object Bench {
           SparkEntry.queries(codegenProbe)(spark, sfDir)
             .write.mode("overwrite").format("noop").save()
           math.max(0L, math.round(coldMs) - (System.nanoTime() - t0) / 1000000L)
-        } catch { case _: Throwable => -1L }
+        } catch {
+          case NonFatal(e) =>
+            System.err.println(s"[bench] codegen probe $codegenProbe FAILED: ${e.getClass.getName}: ${e.getMessage}")
+            -1L
+        }
       }
       .getOrElse(-1L)
     // Per-query codegen charge (the controlled-rerun method): the flagged
@@ -1144,7 +1161,7 @@ object Bench {
           // trigger scheduling + the per-micro-batch ack round trip)
           streamingBlockJson(spark, rows)
         } catch {
-          case e: Throwable =>
+          case NonFatal(e) =>
             System.err.println(s"[bench] streaming FAILED: ${e.getClass.getSimpleName}: ${e.getMessage}")
             s"""{"error":"${e.getClass.getSimpleName}"}"""
         }

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** 10× scale stress of the shared-build family and the native joins —
   * the cheapest way to catch a driver-side bottleneck before a real
@@ -152,7 +153,7 @@ object ScaleStress {
           System.err.println(f"[stress] $name: $sec%.2f s, $n rows")
           Some((name, sec, n))
         } catch {
-          case e: Throwable =>
+          case NonFatal(e) =>
             val sec = (System.nanoTime() - t0) / 1e9
             System.err.println(
               f"[stress] $name FAILED after $sec%.2f s: ${e.getClass.getSimpleName}: ${e.getMessage}")

@@ -5,9 +5,14 @@ import scala.jdk.CollectionConverters._
 import graft.model.Message
 
 /** Ack strategy — the analog of the `Broadway.Acknowledger` behaviour
-  * (/root/reference/lib/broadway/acknowledger.ex:22-42): called exactly once
-  * per ackRef group at the end of a message's journey with the successful
-  * and failed messages of that group.
+  * (/root/reference/lib/broadway/acknowledger.ex:22-42): called at the end
+  * of a message's journey, once per ackRef per task that finishes messages
+  * of that ackRef (the batcher task, or the processor task without
+  * batchers), with that task's successful and failed messages of the
+  * ackRef. Every message is acked exactly once; a micro-batch spread over
+  * several tasks makes several calls for one ackRef, as Broadway's batch
+  * processors each ack their own batch (batch_processor_stage.ex:86-93).
+  * There is no shuffle on ackRef.
   */
 trait Acknowledger extends Serializable {
   def ack(ackRef: String, successful: Seq[Message[_]], failed: Seq[Message[_]]): Unit

@@ -59,6 +59,9 @@ final case class PipelineConfig[A](
     handleFailed: Seq[Message[A]] => Seq[Message[A]] = (ms: Seq[Message[A]]) => ms,
     batchers: Seq[BatcherConfig[A]] = Seq(BatcherConfig[A]("default")),
     partitionBy: Option[A => Int] = None,
+    /** Number of `partitionBy` hash groups; without `partitionBy` the
+      * processor stage runs one task per source partition and this is unused.
+      */
     processorConcurrency: Int = Runtime.getRuntime.availableProcessors() * 2,
     rateLimiting: Option[RateLimiting] = None,
     shutdownBudgetMs: Long = 30000L,

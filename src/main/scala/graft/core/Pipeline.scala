@@ -16,20 +16,27 @@ import graft.runtime.{PipelineRegistry, StageCounters, StageMetrics}
   * Stage mapping (all per micro-batch, executor-side):
   *  - processor stage: `prepareMessages` over partitions (amortized setup,
   *    reference processor_stage.ex:122-147) then `handleMessage` per message
-  *    with crash containment (processor_stage.ex:149-211);
+  *    with crash containment (processor_stage.ex:149-211). Without
+  *    `partitionBy` it runs one task per source partition, uncapped;
+  *    `processorConcurrency` applies only to `partitionBy`, where it is the
+  *    number of hash groups;
   *  - batcher stage: shuffle on (batcher, batchKey) — the analog of the
   *    partition dispatch in topology.ex:286-289 — then per-group chunking by
   *    size / custom splitter with trigger labels size|timeout|flush
   *    (batcher_stage.ex:106-257);
   *  - batch-processor stage: `handleBatch` per chunk with crash containment
   *    (batch_processor_stage.ex:110-127);
-  *  - ack: one `Acknowledger.ack` per ackRef group per micro-batch
-  *    (acknowledger.ex:64-85), failed messages passed to `handleFailed`
-  *    first (broadway.ex:1031-1056).
+  *  - ack: runs in the task that finishes the messages (the batcher task, or
+  *    the processor task without batchers), one `Acknowledger.ack` per
+  *    ackRef per task — each batch processor acks its own messages right
+  *    after `handle_batch` (batch_processor_stage.ex:86-93); failed messages
+  *    pass through `handleFailed` first (broadway.ex:1031-1056).
   *
-  * Scale: nothing here collects to the driver. The only wide edges are the
-  * (batcher, batchKey) shuffle and the ackRef grouping; both keys are
-  * user-chosen and high-cardinality at scale. Deviation from the reference
+  * Scale: nothing here collects to the driver. The only wide edge is the
+  * (batcher, batchKey) shuffle (plus the `partitionBy` one when set); the
+  * keys are user-chosen and high-cardinality at scale. There is no ackRef
+  * shuffle: every message is acked exactly once, by the task that holds
+  * it. Deviation from the reference
   * (documented, SURVEY §7.3): batch timeouts align to micro-batch
   * boundaries — a partial batch flushes at the end of the micro-batch with
   * trigger "timeout" instead of waiting a wall-clock timer.
@@ -213,12 +220,13 @@ object Pipeline {
           }
       }
 
-    // Ack stage: one ack per ackRef group; handleFailed before failure ack.
+    // Ack stage, in the task that finishes the messages (no shuffle): one
+    // ack per ackRef among this partition's messages; handleFailed before
+    // the failure ack.
     val handleFailedF = config.handleFailed
-    val acked = afterBatches
-      .groupByKey((m: Message[A]) => m.ackRef)
-      .mapGroups { (ref: String, it: Iterator[Message[A]]) =>
-        val msgs = seqSorted(it)
+    val acked = afterBatches.mapPartitions { (part: Iterator[Message[A]]) =>
+      // groupBy keeps each group in the sorted order: one sort per partition
+      seqSorted(part).groupBy(_.ackRef).iterator.map { case (ref, msgs) =>
         val (ok, failed) = msgs.partition(_.isOk)
         val failedFinal =
           if (failed.nonEmpty) {
@@ -248,7 +256,10 @@ object Pipeline {
         }
         ref
       }
-    acked.collect() // forces the ack action for this micro-batch
+    }
+    // The one action of the micro-batch: runs every stage, acks included;
+    // it brings back one ackRef per (task, ackRef), not the messages.
+    acked.collect()
     afterBatches
   }
 

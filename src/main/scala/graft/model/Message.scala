@@ -25,7 +25,8 @@ object BatchMode {
   * the engine can shuffle on them without deserializing the payload.
   *
   * `ackRef` identifies the ack group (the `{acknowledger, ack_ref}` pair of
-  * acknowledger.ex:64-85): all messages with one ackRef are acked together.
+  * acknowledger.ex:64-85): messages with one ackRef are acked together, one
+  * ack call per ackRef per task that finishes them.
   */
 final case class Message[A](
     data: A,

@@ -36,7 +36,7 @@ final class StageCounters private[runtime] (
       * span duration, batcher_stage.ex:55-77).
       */
     val batcherNanos: Map[String, LongAccumulator],
-    /** handle_failed invocations (one per ackRef group with failures). */
+    /** handle_failed invocations (one per ackRef per finishing task with failures). */
     val handleFailedInvocations: LongAccumulator,
     /** Wall nanos inside handle_failed. */
     val handleFailedNanos: LongAccumulator,

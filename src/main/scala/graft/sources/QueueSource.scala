@@ -4,6 +4,7 @@ import java.util
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicLong
 import scala.collection.mutable.ArrayBuffer
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -176,12 +177,16 @@ final class QueueTable(queueName: String) extends Table with SupportsRead {
       override def build(): Scan = new Scan {
         override def readSchema(): StructType = QueueSource.schema
         override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-          new QueueMicroBatchStream(queueName)
+          new QueueMicroBatchStream(queueName, SparkSession.active.sparkContext.defaultParallelism)
       }
     }
 }
 
-final class QueueMicroBatchStream(queueName: String) extends MicroBatchStream {
+/** `slots` is the number of task slots read on the driver when the stream is
+  * created (`defaultParallelism`): each micro-batch is planned as up to that
+  * many contiguous offset ranges, so the processor stage runs on every slot.
+  */
+final class QueueMicroBatchStream(queueName: String, slots: Int) extends MicroBatchStream {
   private def handle = QueueSource.get(queueName)
 
   override def initialOffset(): Offset = QueueOffset(0L)
@@ -191,11 +196,14 @@ final class QueueMicroBatchStream(queueName: String) extends MicroBatchStream {
 
   override def deserializeOffset(json: String): Offset = QueueOffset(json.toLong)
 
+  /** `[start, end)` as `min(end - start, slots)` contiguous, disjoint ranges
+    * of near-equal size that cover it exactly; none when it is empty.
+    */
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val s = start.asInstanceOf[QueueOffset].offset
     val e = end.asInstanceOf[QueueOffset].offset
-    if (e <= s) Array.empty
-    else Array(QueueInputPartition(queueName, s, e))
+    val k = math.max(0L, math.min(e - s, slots.toLong)).toInt
+    Array.tabulate[InputPartition](k)(i => QueueInputPartition(queueName, s + (e - s) * i / k, s + (e - s) * (i + 1) / k))
   }
 
   override def createReaderFactory(): PartitionReaderFactory = new PartitionReaderFactory {

@@ -23,6 +23,13 @@ object BadAckProbe {
   val attempted = new java.util.concurrent.atomic.AtomicInteger(0)
 }
 
+/** Messages `handleFailed` saw (executor-shared JVM). */
+object FailedProbe {
+  val seen = new ConcurrentLinkedQueue[Int]()
+  def all: Seq[Int] = seen.asScala.toSeq
+  def clear(): Unit = seen.clear()
+}
+
 object BatchProbe {
   val batches = new ConcurrentLinkedQueue[(BatchInfo, Seq[Int])]()
   def record(info: BatchInfo, data: Seq[Int]): Unit = batches.add((info, data))
@@ -435,6 +442,53 @@ class PipelineSpec extends SparkSpec {
       val byRef = acks.map(a => a.ackRef -> a.successful.map(_.data)).toMap
       assert(byRef("a").toSet == Set(1, 3))
       assert(byRef("b") == Seq(2))
+    } finally tp.stop()
+  }
+
+  // batch_processor_stage.ex:86-93 — each task acks the messages it
+  // finishes. Several pushed blocks make a multi-partition micro-batch
+  // (MemoryStream plans one partition per block), so one ackRef can be
+  // acked by several tasks; every message must still be acked exactly once.
+  test("acks under multi-partition input: each message once, one ackRef per call") {
+    FailedProbe.clear()
+    val cfg = PipelineConfig[Int](
+      name = "ackparts",
+      handleMessage = m => {
+        val routed = m.putBatcher(if (m.data % 2 == 0) "evens" else "odds").putBatchKey((m.data % 3).toString)
+        if (m.data % 7 == 0) routed.failed("div7")
+        else if (m.data % 5 == 0) routed.ackImmediately
+        else routed
+      },
+      // fails multiples of 5 (ack-locked ok: the lock must win) and of 11
+      handleBatch = (_, msgs, _) => msgs.map(m => if (m.data % 5 == 0 || m.data % 11 == 0) m.failed("batch") else m),
+      handleFailed = msgs => {
+        msgs.foreach(m => FailedProbe.seen.add(m.data))
+        msgs.map(m => m.copy(metadata = m.metadata + ("dlq" -> "true")))
+      },
+      batchers = Seq(BatcherConfig[Int]("evens", batchSize = 4), BatcherConfig[Int]("odds", batchSize = 4))
+    )
+    val tp = new TestPipeline(spark, cfg)
+    try {
+      (0 until 4).foreach { b =>
+        tp.pushMessages((1 to 15).map(i => b * 15 + i).map(d => Message(d, ackRef = if (d % 3 == 0) "a" else "b")))
+      }
+      tp.processAllAvailable()
+      val acks = tp.acks()
+      val okData = acks.flatMap(_.successful).map(_.data.asInstanceOf[Int])
+      val failedMsgs = acks.flatMap(_.failed)
+      val failedData = failedMsgs.map(_.data.asInstanceOf[Int])
+      assert((okData ++ failedData).sorted == (1 to 60), s"not acked exactly once: ok=$okData failed=$failedData")
+      acks.foreach { a =>
+        val refs = (a.successful ++ a.failed).map(_.ackRef).toSet
+        assert(refs == Set(a.ackRef), s"ack for ${a.ackRef} carries ackRefs $refs")
+      }
+      val expectedFailed = (1 to 60).filter(d => d % 7 == 0 || (d % 11 == 0 && d % 5 != 0))
+      assert(failedData.sorted == expectedFailed)
+      assert((1 to 60).filter(d => d % 5 == 0 && d % 7 != 0).forall(okData.contains), s"ack-locked lost: $okData")
+      assert(FailedProbe.all.sorted == expectedFailed, "handleFailed must see each failed message once")
+      assert(failedMsgs.forall(_.metadata.get("dlq").contains("true")))
+      val m = tp.running.stageMetrics.getOrElse(fail("no stage metrics registered"))
+      assert(m.ackSuccessful == okData.size.toLong && m.ackFailed == failedData.size.toLong, s"ack totals: $m")
     } finally tp.stop()
   }
 

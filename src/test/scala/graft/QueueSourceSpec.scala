@@ -11,6 +11,12 @@ object QueueProbe {
   def clear(): Unit = rows.clear()
 }
 
+/** Task partitions `handleMessage` ran in (executor-shared JVM). */
+object PartitionProbe {
+  val ids = java.util.concurrent.ConcurrentHashMap.newKeySet[Integer]()
+  def clear(): Unit = ids.clear()
+}
+
 /** Per-value attempt counter for the requeue test (executor-shared JVM). */
 object RequeueProbe {
   val attempts = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
@@ -148,5 +154,74 @@ class QueueSourceSpec extends SparkSpec {
         assert(acked.size == 2) // one ack per committed micro-batch range
       } finally query.stop()
     } finally QueueSource.remove("spec-q2")
+  }
+
+  private def planned(queue: String, start: Long, end: Long): Seq[(Long, Long)] = {
+    import graft.sources.{QueueInputPartition, QueueOffset, QueueTable}
+    val stream = new QueueTable(queue)
+      .newScanBuilder(org.apache.spark.sql.util.CaseInsensitiveStringMap.empty())
+      .build()
+      .toMicroBatchStream("unused")
+    stream.planInputPartitions(QueueOffset(start), QueueOffset(end)).toSeq.map {
+      case p: QueueInputPartition =>
+        assert(p.queue == queue)
+        (p.start, p.end)
+    }
+  }
+
+  test("a micro-batch is planned as defaultParallelism contiguous, disjoint ranges") {
+    val slots = spark.sparkContext.defaultParallelism
+    assert(slots > 1, s"the spec session needs more than one task slot, has $slots")
+    Seq((0L, slots.toLong), (7L, 7L + 1000L), (3L, 3L + 10L * slots + 3L)).foreach { case (s, e) =>
+      val ranges = planned("spec-plan", s, e)
+      assert(ranges.size == slots, s"[$s, $e) planned as $ranges")
+      assert(ranges.head._1 == s && ranges.last._2 == e, s"[$s, $e) not covered: $ranges")
+      assert(ranges.forall { case (from, until) => from < until }, s"empty range in $ranges")
+      // each range starts where the previous one ends: no gap, no overlap
+      assert(ranges.sliding(2).forall { case Seq(a, b) => a._2 == b._1 }, s"gap or overlap in $ranges")
+    }
+    assert(planned("spec-plan", 41L, 42L) == Seq((41L, 42L)))
+    assert(planned("spec-plan", 42L, 42L).isEmpty)
+  }
+
+  test("a queue pipeline runs handleMessage in several tasks and acks every offset once") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    import graft.ack.{AckCollector, CallerAcknowledger}
+    import graft.config.PipelineConfig
+    import graft.core.Pipeline
+    import graft.model.Message
+    PartitionProbe.clear()
+    val collector = "queue-parallel-acks"
+    AckCollector.clear(collector)
+    val q = QueueSource.create("spec-q4", None)
+    try {
+      q.push((0 until 1000).map(i => s"v$i"): _*)
+      val messages = spark.readStream
+        .format("graft.sources.QueueSourceProvider")
+        .option("queue", "spec-q4")
+        .load()
+        .select(col("offset"), col("value"))
+        .as[(Long, String)]
+        .map { case (off, v) => Message(v, metadata = Map("seq" -> off.toString)) }
+      val cfg = PipelineConfig[String](
+        name = "queue-parallel",
+        handleMessage = m => {
+          PartitionProbe.ids.add(org.apache.spark.TaskContext.getPartitionId())
+          m
+        }
+      )
+      val running = Pipeline.start(spark, messages, cfg, CallerAcknowledger(collector))
+      try running.processAllAvailable()
+      finally running.stop()
+      val acks = AckCollector.drain(collector)
+      val offsets = acks.flatMap(a => a.successful ++ a.failed).map(_.metadata("seq").toLong)
+      assert(offsets.sorted == (0L until 1000L), s"offsets not acked exactly once: ${offsets.size} acked")
+      assert(acks.forall(_.failed.isEmpty))
+      assert(PartitionProbe.ids.size > 1, s"handleMessage ran in partitions ${PartitionProbe.ids}")
+    } finally {
+      QueueSource.remove("spec-q4")
+      AckCollector.clear(collector)
+    }
   }
 }
