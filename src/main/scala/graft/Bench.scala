@@ -1261,14 +1261,16 @@ object StreamBench {
     val rows = sys.env.getOrElse("SPARK_GRAFT_STREAM_ROWS", "200000").toInt
     val reps = sys.env.getOrElse("SPARK_GRAFT_STREAM_REPS", "1").toInt
     val only = sys.env.get("SPARK_GRAFT_STREAM_ONLY")
-    (1 to reps).foreach { i =>
-      val block = only match {
-        case Some("interval_join") => Bench.intervalJoinBlockJson(spark, rows)
-        case Some("asof_bounded")  => Bench.asofBoundedBlockJson(spark, rows)
-        case _                     => Bench.streamingBlockJson(spark, rows)
-      }
-      println(s"""{"rep":$i,"streaming":$block}""")
+    def block(): String = only match {
+      case Some("interval_join") => Bench.intervalJoinBlockJson(spark, rows)
+      case Some("asof_bounded")  => Bench.asofBoundedBlockJson(spark, rows)
+      case _                     => Bench.streamingBlockJson(spark, rows)
     }
+    // One untimed, unprinted warm-up rep: without it rep 1 absorbs the
+    // JVM's class loading and JIT and reads a quarter to a third below
+    // the reps after it.
+    block()
+    (1 to reps).foreach(i => println(s"""{"rep":$i,"streaming":${block()}}"""))
     spark.stop()
   }
 }

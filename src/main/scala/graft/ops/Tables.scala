@@ -1,17 +1,62 @@
 package graft.ops
 
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Parquet table loaders over the driver testdata layout
-  * (`/root/testdata/sf{N}/{table}.parquet`, see /root/repo/TESTDATA.md).
+  * (`{sfDir}/{table}.parquet`, see TESTDATA.md).
   *
   * All engine queries read through here so that column pruning and filter
   * pushdown reach the Parquet scan (verify with `.explain("formatted")`:
   * `PushedFilters` / `ReadSchema` must reflect the query, not the table).
+  *
+  * Schema pinning: `spark.read.parquet` runs a schema-inference job on every
+  * call (tens of ms warm), so `table` infers each file's schema once and then
+  * reads with `spark.read.schema(pinned)`. A pin is keyed by the file's
+  * qualified path and checked on every call against the file's length and
+  * modification time (one `getFileStatus`) and against the session's Parquet
+  * read confs (`spark.sql.parquet.*`, `spark.sql.legacy.parquet.*`,
+  * `spark.sql.caseSensitive`; `events` sets `nanosAsLong`, which changes the
+  * inferred type of `ts`). On a mismatch the schema is inferred again and
+  * replaces the entry, so there is one entry per path. A directory is not
+  * pinned: it is read with inference as before.
+  *
+  * The pin is catalog metadata, like a catalog table's schema, not a
+  * result cache: every read still lists and scans the file, so it lives
+  * here and `Caches.invalidate()` does not clear it.
   */
 object Tables {
-  def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  private final case class Pin(length: Long, mtime: Long, confs: Map[String, String], schema: StructType)
+
+  private val pins = new ConcurrentHashMap[String, Pin]()
+
+  private def parquetReadConfs(spark: SparkSession): Map[String, String] =
+    spark.conf.getAll.filter { case (k, _) =>
+      k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.") ||
+        k == "spark.sql.caseSensitive"
+    }
+
+  def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    val p = new Path(path)
+    val st = p.getFileSystem(spark.sessionState.newHadoopConf()).getFileStatus(p)
+    if (st.isDirectory) spark.read.parquet(path)
+    else {
+      val key = st.getPath.toString
+      val confs = parquetReadConfs(spark)
+      val pin = Option(pins.get(key))
+        .filter(c => c.length == st.getLen && c.mtime == st.getModificationTime && c.confs == confs)
+        .getOrElse {
+          val fresh = Pin(st.getLen, st.getModificationTime, confs, spark.read.parquet(path).schema)
+          pins.put(key, fresh)
+          fresh
+        }
+      spark.read.schema(pin.schema).parquet(path)
+    }
+  }
 
   def lineitem(s: SparkSession, d: String): DataFrame   = table(s, d, "lineitem")
   def orders(s: SparkSession, d: String): DataFrame     = table(s, d, "orders")
