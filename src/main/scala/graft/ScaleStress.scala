@@ -410,24 +410,26 @@ object ScaleStress {
       } finally q.stop()
     }
 
-    // ---- batcher backend append cost at x-scale -------------------------
+    // ---- batcher append cost at x-scale -------------------------------
     // 2000·x messages trickle into ONE open group across 40 waves with
-    // unreachable size/timeout triggers: `encoded` re-encodes the ENTIRE
-    // open buffer every data-carrying trigger (O(buffer) per wave —
-    // quadratic total state I/O over the fill), `incremental` appends
-    // (O(new) per wave — linear). The wall ratio between the two lines IS
-    // the claim; both run the same RocksDB+Avro posture and the same
-    // trigger cadence, so everything else cancels.
+    // unreachable size/timeout triggers, so every wave takes
+    // `incremental`'s append path: each wave writes its new messages and
+    // the 3-field meta row, never the open buffer, so total state I/O is
+    // linear over the fill rather than quadratic.
     def trickleRun(
-        mk: org.apache.spark.sql.Dataset[graft.model.Message[String]] =>
-          org.apache.spark.sql.Dataset[graft.streaming.EmittedBatch[String]],
         wavesOverride: Option[Int] = None,
         perWaveOverride: Option[Long] = None
     ): Long = {
       import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
       val s = MemoryStream[graft.model.Message[String]]
-      val ds = mk(s.toDS())
+      // statePartitions = 1: ONE open group — at the session's default
+      // width every one of the 16 state stores pays load/commit/upload
+      // per micro-batch (~1.2 s/wave measured), burying the buffer term;
+      // the first-class width knob is exactly how a deployment sizes
+      // this away (EventTime.statePartitionsForVolume)
+      val ds = graft.streaming.KeyedBatcher.incremental(s.toDS(), batchSize = 1 << 30,
+        batchTimeoutMs = 3600000L, statePartitions = Some(1))
       // the batcher rebases onto a CLONED session (RocksDB+Avro binding);
       // progress events are per-session, so the listener attaches there
       val consumed = new java.util.concurrent.atomic.AtomicLong()
@@ -455,9 +457,9 @@ object ScaleStress {
         val perWave = perWaveOverride.getOrElse(50L * x)
         var pushed = 0L
         var w = 0
-        // ~1 KB payloads: the open buffer fills to ~2 MB·x, so the
-        // O(buffer)-per-wave rewrite term dominates the per-trigger fixed
-        // costs and the backend asymptotics are what the two lines show
+        // ~1 KB payloads: the open buffer fills to ~2 MB·x, so a wave
+        // that rewrote the buffer would outweigh the per-trigger fixed
+        // costs and show in the line's wall time
         val pad = "abcdefghijklmnopqrstuvwxyz0123456789" * 28
         while (w < waves) {
           s.addData((0L until perWave).map(i => graft.model.Message(
@@ -468,9 +470,8 @@ object ScaleStress {
           val deadline = System.currentTimeMillis() + 120000
           while (consumed.get() < pushed && System.currentTimeMillis() < deadline)
             Thread.sleep(10)
-          // a silent give-up here would let the encoded-vs-incremental
-          // wall ratio (the entire claim of these lines) be computed over
-          // DIFFERENT effective workloads — fail the line loudly instead
+          // a silent give-up here would time a smaller workload than
+          // the line names — fail the line loudly instead
           if (consumed.get() < pushed)
             throw new IllegalStateException(
               s"batcher_trickle wave $w stalled: consumed ${consumed.get()} of " +
@@ -484,45 +485,11 @@ object ScaleStress {
         ds.sparkSession.streams.removeListener(listener)
       }
     }
-    // CHANGELOG checkpointing for both lines: without it RocksDB uploads
-    // a full store snapshot per commit, making per-trigger cost O(state)
-    // for EVERY backend and burying the append-vs-rewrite difference the
-    // lines exist to measure (measured: encoded 38.9 s vs incremental
-    // 53.2 s at x=10 under snapshot-per-commit — the snapshot dominates
-    // and incremental's two-store overhead loses). With changelogs the
-    // per-commit upload is the writes themselves — the deployment
-    // posture the bench's interval_join_rocksdb_p8_changelog line
-    // already motivates.
-    spark.conf.set(
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
-    // untimed warmup of BOTH backends (streaming codegen + RocksDB/Avro
-    // init, ~4 s) — without it the first timed line absorbs the charge
-    // and the encoded-vs-incremental comparison is run-order noise
-    if (only.forall(_.exists(_.startsWith("batcher_trickle")))) {
-      trickleRun(d =>
-        graft.streaming.KeyedBatcher.encoded(d, batchSize = 1 << 30, batchTimeoutMs = 3600000L,
-          statePartitions = Some(1)),
-        wavesOverride = Some(3), perWaveOverride = Some(50L))
-      trickleRun(d =>
-        graft.streaming.KeyedBatcher.incremental(d, batchSize = 1 << 30, batchTimeoutMs = 3600000L,
-          statePartitions = Some(1)),
-        wavesOverride = Some(3), perWaveOverride = Some(50L))
-    }
-    val batchers = Seq(
-      // statePartitions = 1: ONE open group — at the session's default
-      // width every one of the 16 state stores pays load/commit/upload
-      // per micro-batch (~1.2 s/wave measured), burying the buffer term;
-      // the first-class width knob is exactly how a deployment sizes
-      // this away (EventTime.statePartitionsForVolume)
-      timed("batcher_trickle_encoded")(trickleRun(d =>
-        graft.streaming.KeyedBatcher.encoded(d, batchSize = 1 << 30, batchTimeoutMs = 3600000L,
-          statePartitions = Some(1)))),
-      timed("batcher_trickle_incremental")(trickleRun(d =>
-        graft.streaming.KeyedBatcher.incremental(d, batchSize = 1 << 30, batchTimeoutMs = 3600000L,
-          statePartitions = Some(1))))
-    )
-    spark.conf.unset(
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled")
+    // untimed warmup (streaming codegen + RocksDB/Avro init, ~4 s) —
+    // without it the timed line absorbs the charge
+    if (only.forall(_.exists(_.startsWith("batcher_trickle"))))
+      trickleRun(wavesOverride = Some(3), perWaveOverride = Some(50L))
+    val batchers = Seq(timed("batcher_trickle_incremental")(trickleRun()))
 
     // ---- routed-compaction fan-out: pooled vs sequential rewrites ------
     // The compactor's per-route-group rewrite jobs are independent and

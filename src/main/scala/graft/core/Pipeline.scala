@@ -6,8 +6,9 @@ import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.ack.Acknowledger
 import graft.config.{BatcherConfig, PipelineConfig}
-import graft.model.{BatchInfo, BatchMode, Message, MessageStatus}
+import graft.model.{BatchInfo, Message, MessageStatus}
 import graft.runtime.{PipelineRegistry, StageCounters, StageMetrics}
+import graft.streaming.KeyedBatcher
 
 /** The pipeline engine: Broadway's producer → processor → batcher →
   * batch-processor topology (/root/reference/guides/internals/architecture.md:
@@ -263,42 +264,22 @@ object Pipeline {
     afterBatches
   }
 
-  /** Chunk one (batcher, batchKey) group into batches with trigger labels.
-    * Full chunks (fixed size or splitter-emitted) are "size"; a flush-mode
-    * message delivers the open chunk AT that message (batcher_stage.ex:
-    * 178-179 — later messages in the group start a new chunk, same
-    * per-message semantics as KeyedBatcher); a trailing partial chunk is
-    * "timeout" (micro-batch-aligned timeout). Splitter path mirrors the
-    * tuple batch_size semantics (options.ex:233-263): accumulator folds
-    * until the step says emit.
+  /** Chunk one (batcher, batchKey) group into batches with trigger labels:
+    * [[graft.streaming.KeyedBatcher.foldGroup]] from no open state, so
+    * full chunks (fixed size or splitter-emitted, options.ex:233-263) are
+    * "size" and a flush-mode message delivers the open chunk AT that
+    * message (batcher_stage.ex:178-179), exactly as across micro-batches.
+    * The fold's remainder is the trailing "timeout" chunk
+    * (micro-batch-aligned timeout); with no prior state the fold's
+    * deadline check never fires, so `now` is immaterial.
     */
   def splitBatches[A](
       msgs: Seq[Message[A]],
       bc: BatcherConfig[A]
   ): Seq[(Seq[Message[A]], String)] = {
-    val out = Vector.newBuilder[(Seq[Message[A]], String)]
-    var cur = Vector.empty[Message[A]]
-    var acc = bc.batchSplitter.map(_.init).getOrElse(0L)
-    def emit(trigger: String): Unit =
-      if (cur.nonEmpty) {
-        out += ((cur, trigger))
-        cur = Vector.empty
-        acc = bc.batchSplitter.map(_.init).getOrElse(0L)
-      }
-    msgs.foreach { m =>
-      cur :+= m
-      bc.batchSplitter match {
-        case Some(sp) =>
-          val (emitNow, next) = sp.step(m, acc)
-          acc = next
-          if (emitNow) emit("size")
-        case None =>
-          if (cur.size >= bc.batchSize) emit("size")
-      }
-      if (m.batchMode == BatchMode.Flush) emit("flush")
-    }
-    emit("timeout")
-    out.result()
+    val (emitted, open) = KeyedBatcher.foldGroup(bc.name, "", None, 0L, msgs,
+      bc.batchSize, bc.batchTimeoutMs, bc.batchSplitter)
+    emitted.map(b => (b.messages, b.trigger)) ++ open.map { case (rest, _, _) => (rest, "timeout") }
   }
 
   /** Start a streaming pipeline over a source of already-wrapped messages.

@@ -31,6 +31,14 @@ final case class EmittedBatch[A](
   * rides in `GroupState` alongside the open buffer, so dynamic boundaries
   * (e.g. cumulative bytes) also span micro-batches.
   *
+  * Two state backends run that rule through one pure fold
+  * ([[KeyedBatcher.foldGroup]], which `Pipeline.splitBatches` also runs
+  * within a micro-batch): [[KeyedBatcher.apply]] keeps the open batch as
+  * a Java-serialized `GroupState` blob and runs on any state-store
+  * provider; [[KeyedBatcher.incremental]] keeps it as Avro-encoded
+  * `ListState` rows on RocksDB, so appends cost O(new messages) and the
+  * payload case class can gain a field across a checkpoint restart.
+  *
   * Scale: state per open (batcher, batchKey) group is bounded by one open
   * batch; the shuffle key is the group key, so hot keys can be salted by
   * the caller via batchKey suffixing.
@@ -57,16 +65,7 @@ object KeyedBatcher {
   )(implicit enc: Encoder[Message[A]], outEnc: Encoder[EmittedBatch[A]]): Dataset[EmittedBatch[A]] = {
     implicit val keyEnc: Encoder[(String, String)] = Encoders.tuple(Encoders.STRING, Encoders.STRING)
     implicit val stateEnc: Encoder[Array[Byte]] = Encoders.BINARY
-
-    val src = statePartitions match {
-      case None => messages
-      case Some(p) =>
-        require(p > 0, s"statePartitions must be positive, got $p")
-        val bound = org.apache.spark.sql.GraftColumns.cloneWithConf(
-          messages.sparkSession, "spark.sql.shuffle.partitions" -> p.toString)
-        org.apache.spark.sql.GraftColumns.ofRows(bound, messages.queryExecution.logical).as[Message[A]]
-    }
-    src
+    bind(messages, batchSize, batchTimeoutMs, splitter, statePartitions)
       .groupByKey((m: Message[A]) => (m.batcher, m.batchKey))
       .flatMapGroupsWithState[Array[Byte], EmittedBatch[A]](
         OutputMode.Append(),
@@ -97,11 +96,37 @@ object KeyedBatcher {
       }
   }
 
+  /** Check the batching arguments as `PipelineConfig.validate` does and
+    * rebase `messages` onto a cloned session carrying `confs` plus
+    * `spark.sql.shuffle.partitions` = `statePartitions`, so they bind at
+    * query start without touching the caller's session. With neither,
+    * the input is returned as is and inherits the session conf.
+    */
+  private def bind[A](
+      messages: Dataset[Message[A]],
+      batchSize: Int,
+      batchTimeoutMs: Long,
+      splitter: Option[BatchSplitter[A]],
+      statePartitions: Option[Int],
+      confs: (String, String)*
+  )(implicit enc: Encoder[Message[A]]): Dataset[Message[A]] = {
+    require(batchSize > 0 || splitter.isDefined, "batch_size must be positive")
+    require(batchTimeoutMs > 0, "batch_timeout must be positive")
+    statePartitions.foreach(p => require(p > 0, s"statePartitions must be positive, got $p"))
+    val all = confs ++ statePartitions.map("spark.sql.shuffle.partitions" -> _.toString)
+    if (all.isEmpty) messages
+    else {
+      val bound = org.apache.spark.sql.GraftColumns.cloneWithConf(messages.sparkSession, all: _*)
+      org.apache.spark.sql.GraftColumns.ofRows(bound, messages.queryExecution.logical).as[Message[A]]
+    }
+  }
+
   /** The shared BatcherStage fold — prior open state + this trigger's
     * messages → (emitted batches, state to persist; None = group closed).
-    * Pure, so the two state backends ([[apply]]'s Java-serialized blob and
-    * [[encoded]]'s row-encoded [[OpenBatch]]) drive IDENTICAL semantics
-    * and cannot diverge.
+    * Pure, so both state backends ([[apply]]'s Java-serialized blob and
+    * [[incremental]]'s list state) and the per-micro-batch
+    * `Pipeline.splitBatches` (which folds from no prior state) drive
+    * IDENTICAL semantics and cannot diverge.
     *
     * The timeout clock starts when a batch OPENS (its first message),
     * batcher_stage.ex:80-89 — NOT at the latest append. Re-arming a full
@@ -164,90 +189,51 @@ object KeyedBatcher {
     (out.result(), if (rest.isEmpty) None else Some((rest, acc, deadline)))
   }
 
-  /** Row-encoded open-batch state for [[KeyedBatcher.encoded]]: Spark
-    * encodes it with the payload's own Encoder (Avro on disk), so the
-    * checkpoint's value schema IS the payload schema — and evolves with
-    * it — instead of an opaque Java-serialized blob.
-    */
-  final case class OpenBatch[A](buffer: Seq[Message[A]], acc: Long, deadline: Long)
-
-  /** [[apply]] with ROW-ENCODED state (`transformWithState`): for payload
-    * types `A` with a product Encoder, the open-batch state is stored as
-    * encoded rows instead of a Java-serialized blob, which upgrades the
-    * restart contract from "keep `A` binary-stable across deploys or
-    * drain" to real schema evolution — ADD a (nullable / defaultable)
-    * field to the payload case class between checkpoint and resume and
-    * the buffered batch still drains, the new field null-filled on old
-    * rows. Identical batching semantics to [[apply]] (same [[foldGroup]]
-    * core; same size / timeout / flush triggers and deadline rules; the
-    * timeout timer is a real per-group processing-time timer, checked
-    * against the open batch's deadline so a stale timer of an
-    * already-emitted batch is a no-op).
-    *
-    * Requirements (bound automatically onto the query via a cloned
-    * session, leaving the caller's session untouched):
-    * `transformWithState` runs only on the RocksDB state-store provider,
-    * and schema evolution needs the Avro state encoding — exactly the
-    * 100 TB deployment posture (state beyond heap) anyway. Java-ser
-    * [[apply]] remains the fallback for opaque payload types.
-    */
-  def encoded[A](
-      messages: Dataset[Message[A]],
-      batchSize: Int = 100,
-      batchTimeoutMs: Long = 1000L,
-      splitter: Option[BatchSplitter[A]] = None,
-      statePartitions: Option[Int] = None
-  )(implicit
-      enc: Encoder[Message[A]],
-      outEnc: Encoder[EmittedBatch[A]],
-      stateEnc: Encoder[OpenBatch[A]]
-  ): Dataset[EmittedBatch[A]] = {
-    implicit val keyEnc: Encoder[(String, String)] = Encoders.tuple(Encoders.STRING, Encoders.STRING)
-    statePartitions.foreach(p => require(p > 0, s"statePartitions must be positive, got $p"))
-    val confs =
-      Seq(
-        "spark.sql.streaming.stateStore.providerClass" ->
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-        "spark.sql.streaming.stateStore.encodingFormat" -> "avro"
-      ) ++ statePartitions.map("spark.sql.shuffle.partitions" -> _.toString)
-    val bound = org.apache.spark.sql.GraftColumns.cloneWithConf(messages.sparkSession, confs: _*)
-    org.apache.spark.sql.GraftColumns.ofRows(bound, messages.queryExecution.logical).as[Message[A]]
-      .groupByKey((m: Message[A]) => (m.batcher, m.batchKey))
-      .transformWithState(
-        new BatcherProcessor[A](batchSize, batchTimeoutMs, splitter, stateEnc),
-        org.apache.spark.sql.streaming.TimeMode.ProcessingTime(),
-        OutputMode.Append())
-  }
-
   /** Open-batch metadata for [[incremental]]: buffered message count,
     * splitter accumulator, absolute deadline — everything the append
     * fast path needs WITHOUT reading the buffer.
     */
   final case class OpenMeta(count: Long, acc: Long, deadline: Long)
 
-  /** [[encoded]] with an O(new-messages) append path: the open buffer
-    * lives in `ListState` (one row-encoded `Message[A]` per buffered
-    * message, variable "buf") beside a tiny `ValueState` ("meta" —
-    * count / splitter accumulator / deadline). A trigger that fires no
-    * emission — the common case for a large batch filling slowly — only
-    * APPENDS its new messages and rewrites the 3-field meta row, never
-    * reading or re-encoding the buffer; [[encoded]] (and [[apply]])
-    * re-encode the ENTIRE open buffer every data-carrying trigger, an
-    * O(buffer) write that turns a trickle-filled 100k-message batch into
-    * quadratic total state I/O. Emission triggers (size / splitter /
-    * flush / overdue deadline) are PRE-DECIDED from (count, acc,
-    * deadline) + the incoming messages alone — the exact decision
-    * sequence [[foldGroup]] runs — and only then is the buffer read once
-    * and the remainder rewritten through the same [[foldGroup]] core, so
-    * the three backends cannot diverge semantically.
+  /** [[apply]] with ROW-ENCODED state and an O(new-messages) append
+    * path (`transformWithState`): the open buffer lives in `ListState`
+    * (one row-encoded `Message[A]` per buffered message, variable "buf")
+    * beside a tiny `ValueState` ("meta" — count / splitter accumulator /
+    * deadline). A trigger that fires no emission — the common case for a
+    * large batch filling slowly — only APPENDS its new messages and
+    * rewrites the 3-field meta row, never reading or re-encoding the
+    * buffer; [[apply]] re-serializes the ENTIRE open buffer every
+    * data-carrying trigger, an O(buffer) write that turns a
+    * trickle-filled 100k-message batch into quadratic total state I/O.
+    * Emission triggers (size / splitter / flush / overdue deadline) are
+    * PRE-DECIDED from (count, acc, deadline) + the incoming messages
+    * alone — the exact decision sequence [[foldGroup]] runs — and only
+    * then is the buffer read once and the remainder rewritten through the
+    * same [[foldGroup]] core, so the two backends cannot diverge
+    * semantically. The timeout timer is a real per-group processing-time
+    * timer, checked against the open batch's deadline so a stale timer
+    * of an already-emitted batch is a no-op.
     *
-    * Same posture and evolution story as [[encoded]]: RocksDB + Avro
-    * bound via a cloned session; ADD a nullable field to the payload
-    * case class across a restart and buffered rows null-fill it. Bonus
-    * inspectability: `StateInspect.hotKeys(..., stateVarName = "buf")`
+    * Schema evolution: for payload types `A` with a product Encoder the
+    * checkpoint's value schema IS the payload schema, so ADDING a
+    * nullable field to the payload case class between checkpoint and
+    * resume still drains the buffered batch, old rows null-filled — where
+    * [[apply]]'s Java-serialized blob needs `A` binary-stable across
+    * deploys. Java-ser [[apply]] remains the backend for opaque payload
+    * types and for any state-store provider.
+    *
+    * Bound automatically onto the query via a cloned session, leaving the
+    * caller's session untouched: `transformWithState` runs only on the
+    * RocksDB provider, schema evolution needs the Avro state encoding,
+    * and changelog checkpointing makes each commit upload only that
+    * commit's writes — without it RocksDB uploads a full store snapshot
+    * per commit, an O(state) cost per trigger that buries the O(new)
+    * append path (ScaleStress x=10, separate runs: 53.2 s
+    * under snapshot-per-commit, 21.6–25.1 s with changelogs).
+    *
+    * Inspectability: `StateInspect.hotKeys(..., stateVarName = "buf")`
     * ranks hot groups by their REAL buffered-row count (one state row
-    * per message), where the blob/row backends show one opaque row per
-    * group.
+    * per message), where the blob backend shows one opaque row per group.
     */
   def incremental[A](
       messages: Dataset[Message[A]],
@@ -260,15 +246,11 @@ object KeyedBatcher {
       outEnc: Encoder[EmittedBatch[A]]
   ): Dataset[EmittedBatch[A]] = {
     implicit val keyEnc: Encoder[(String, String)] = Encoders.tuple(Encoders.STRING, Encoders.STRING)
-    statePartitions.foreach(p => require(p > 0, s"statePartitions must be positive, got $p"))
-    val confs =
-      Seq(
-        "spark.sql.streaming.stateStore.providerClass" ->
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-        "spark.sql.streaming.stateStore.encodingFormat" -> "avro"
-      ) ++ statePartitions.map("spark.sql.shuffle.partitions" -> _.toString)
-    val bound = org.apache.spark.sql.GraftColumns.cloneWithConf(messages.sparkSession, confs: _*)
-    org.apache.spark.sql.GraftColumns.ofRows(bound, messages.queryExecution.logical).as[Message[A]]
+    bind(messages, batchSize, batchTimeoutMs, splitter, statePartitions,
+      "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+      "spark.sql.streaming.stateStore.encodingFormat" -> "avro",
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true")
       .groupByKey((m: Message[A]) => (m.batcher, m.batchKey))
       .transformWithState(
         new IncrementalProcessor[A](batchSize, batchTimeoutMs, splitter, enc),
@@ -363,59 +345,6 @@ object KeyedBatcher {
         buf.clear()
         meta.clear()
         Iterator.single(EmittedBatch(key._1, key._2, "timeout", buffered))
-      } else Iterator.empty // stale timer of an earlier batch under this key
-    }
-  }
-
-  /** The `transformWithState` processor behind [[encoded]] — a thin state
-    * adapter around [[foldGroup]].
-    */
-  private final class BatcherProcessor[A](
-      batchSize: Int,
-      batchTimeoutMs: Long,
-      splitter: Option[BatchSplitter[A]],
-      stateEnc: Encoder[OpenBatch[A]]
-  ) extends org.apache.spark.sql.streaming.StatefulProcessor[
-      (String, String), Message[A], EmittedBatch[A]] {
-    @transient private var open: org.apache.spark.sql.streaming.ValueState[OpenBatch[A]] = _
-
-    override def init(
-        outputMode: OutputMode,
-        timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-      open = getHandle.getValueState[OpenBatch[A]](
-        "open", stateEnc, org.apache.spark.sql.streaming.TTLConfig.NONE)
-
-    override def handleInputRows(
-        key: (String, String),
-        rows: Iterator[Message[A]],
-        timers: org.apache.spark.sql.streaming.TimerValues): Iterator[EmittedBatch[A]] = {
-      val now = timers.getCurrentProcessingTimeInMs()
-      val prior =
-        if (open.exists()) { val s = open.get(); Some((s.buffer.toVector, s.acc, s.deadline)) }
-        else None
-      val (emitted, next) = foldGroup(key._1, key._2, prior, now,
-        graft.core.Pipeline.seqSorted(rows), batchSize, batchTimeoutMs, splitter)
-      next match {
-        case None => open.clear()
-        case Some((buf, acc, deadline)) =>
-          open.update(OpenBatch(buf, acc, deadline))
-          // re-registering the same expiry is idempotent; a superseded
-          // timer (batch emitted, new one opened later) fires as a stale
-          // no-op — handleExpiredTimer checks the LIVE deadline
-          getHandle.registerTimer(deadline)
-      }
-      emitted.iterator
-    }
-
-    override def handleExpiredTimer(
-        key: (String, String),
-        timers: org.apache.spark.sql.streaming.TimerValues,
-        info: org.apache.spark.sql.streaming.ExpiredTimerInfo): Iterator[EmittedBatch[A]] = {
-      if (!open.exists()) return Iterator.empty // stale timer of a closed batch
-      val s = open.get()
-      if (info.getExpiryTimeInMs >= s.deadline && s.buffer.nonEmpty) {
-        open.clear()
-        Iterator.single(EmittedBatch(key._1, key._2, "timeout", s.buffer))
       } else Iterator.empty // stale timer of an earlier batch under this key
     }
   }

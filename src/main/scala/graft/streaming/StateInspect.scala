@@ -36,10 +36,11 @@ object StateInspect {
     * Spark assembles the user-facing key/value view across the side's
     * paired internal stores; `storeName` addresses one internal store
     * directly when the raw layout is the question. For
-    * `transformWithState` operators (e.g. [[KeyedBatcher.encoded]]'s
+    * `transformWithState` operators (e.g. [[KeyedBatcher.incremental]]'s
     * checkpoint) pass `stateVarName` — the processor's state variable
-    * name ("open" for the encoded batcher); TWS stores are addressed by
-    * variable, not store name.
+    * name ("buf" for the incremental batcher's buffered messages, one row
+    * per message; "meta" for its one count/accumulator/deadline row per
+    * group); TWS stores are addressed by variable, not store name.
     */
   def stateRows(
       spark: SparkSession,

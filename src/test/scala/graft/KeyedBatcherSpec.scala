@@ -13,8 +13,9 @@ object EmitProbe {
   def clear(): Unit = emitted.clear()
 }
 
-/** String-rendered probe for the encoded-state specs (payloads are case
-  * classes there, rendered to stable strings at emit time).
+/** String-rendered probe for the `incremental` (row-encoded state) specs
+  * and the differential against `apply` (payloads are case classes there,
+  * rendered to stable strings at emit time).
   */
 object EmitProbeS {
   val emitted = new ConcurrentLinkedQueue[(String, Seq[String])]()
@@ -23,9 +24,10 @@ object EmitProbeS {
   def clear(): Unit = emitted.clear()
 }
 
-/** The evolution pair: V2 is V1 plus an added nullable field — the exact
-  * payload change [[KeyedBatcher.encoded]]'s row-encoded state exists to
-  * survive across a checkpoint restart.
+/** The evolution pair: V2 is V1 plus an added nullable field — the
+  * payload change [[KeyedBatcher.incremental]]'s Avro-encoded list state
+  * survives across a checkpoint restart (and [[KeyedBatcher.apply]]'s
+  * Java-serialized blob does not).
   */
 case class PayV1(s: String)
 case class PayV2(s: String, n: Option[Long] = None)
@@ -250,35 +252,24 @@ class KeyedBatcherSpec extends SparkSpec {
     assert(bad.getMessage.contains("state shape"))
   }
 
-  test("encoded: same size/timeout semantics on row-encoded state (shared foldGroup core)") {
-    EmitProbeS.clear()
+  test("non-positive batch size or timeout is rejected like PipelineConfig.validate") {
     implicit val sql: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val stream = MemoryStream[Message[PayV1]]
-    val batches = KeyedBatcher.encoded(stream.toDS(), batchSize = 10, batchTimeoutMs = 300)
-    val query = batches.writeStream
-      .outputMode("append")
-      .trigger(Trigger.ProcessingTime(100))
-      .foreachBatch { (ds: org.apache.spark.sql.Dataset[EmittedBatch[PayV1]], _: Long) =>
-        ds.collect().foreach { b =>
-          EmitProbeS.emitted.add((b.trigger, b.messages.map(_.data.s)))
-        }
-        ()
-      }
-      .start()
-    try {
-      stream.addData((1 to 15).map(i => Message(PayV1(s"m$i"), metadata = Map("seq" -> i.toString))))
-      val deadline = System.currentTimeMillis() + 20000
-      var got = Seq.empty[(String, Seq[String])]
-      while (got.size < 2 && System.currentTimeMillis() < deadline) {
-        Thread.sleep(100); got = got ++ EmitProbeS.drain()
-      }
-      assert(got.size == 2, s"expected size+timeout batches, got $got")
-      assert(got.head._1 == "size" && got.head._2 == (1 to 10).map(i => s"m$i"))
-      assert(got(1)._1 == "timeout" && got(1)._2 == (11 to 15).map(i => s"m$i"))
-    } finally query.stop()
+    val ds = MemoryStream[Message[PayV1]].toDS()
+    val mks: Seq[(Int, Long) => Any] = Seq(
+      (bs, to) => KeyedBatcher(ds, batchSize = bs, batchTimeoutMs = to),
+      (bs, to) => KeyedBatcher.incremental(ds, batchSize = bs, batchTimeoutMs = to))
+    mks.foreach { mk =>
+      assert(intercept[IllegalArgumentException](mk(0, 1000L)).getMessage
+        .contains("batch_size must be positive"))
+      assert(intercept[IllegalArgumentException](mk(10, 0L)).getMessage
+        .contains("batch_timeout must be positive"))
+    }
+    // a splitter replaces the size budget, so batchSize is then unused
+    val sp = graft.config.BatchSplitter[PayV1](0L, (_, acc) => (false, acc))
+    KeyedBatcher(ds, batchSize = 0, splitter = Some(sp))
   }
 
-  test("encoded: ADDING a payload field between checkpoint and resume still drains the open batch") {
+  test("incremental: ADDING a payload field between checkpoint and resume still drains the open batch") {
     // The upgrade apply()'s Java-ser state cannot make: state written with
     // Message[PayV1] is read back by a query compiled against
     // Message[PayV2] (one added nullable field) — Avro-encoded state
@@ -290,7 +281,12 @@ class KeyedBatcherSpec extends SparkSpec {
     val checkpoint = java.nio.file.Files.createTempDirectory("graft-evolve").toString
 
     val s1 = MemoryStream[Message[PayV1]]
-    val q1 = KeyedBatcher.encoded(s1.toDS(), batchSize = 10, batchTimeoutMs = 600000).writeStream
+    val batches1 = KeyedBatcher.incremental(s1.toDS(), batchSize = 10, batchTimeoutMs = 600000)
+    // changelog checkpointing binds on the batcher's cloned session only
+    val changelog = "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
+    assert(batches1.sparkSession.conf.get(changelog) == "true")
+    assert(spark.conf.getOption(changelog).isEmpty, "caller's session was modified")
+    val q1 = batches1.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.ProcessingTime(100))
@@ -319,7 +315,7 @@ class KeyedBatcherSpec extends SparkSpec {
     // an engine concern)
     val s2 = MemoryStream[Message[PayV2]]
     s2.addData(Seq.empty[Message[PayV2]])
-    val q2 = KeyedBatcher.encoded(s2.toDS(), batchSize = 10, batchTimeoutMs = 600000).writeStream
+    val q2 = KeyedBatcher.incremental(s2.toDS(), batchSize = 10, batchTimeoutMs = 600000).writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.ProcessingTime(100))
@@ -342,44 +338,6 @@ class KeyedBatcherSpec extends SparkSpec {
         (1 to 7).map(i => s"m$i/None") ++ (8 to 10).map(i => s"m$i/Some($i)"),
         s"evolved payloads wrong: ${got.head._2}")
     } finally q2.stop()
-  }
-
-  test("encoded: the open-batch state is INSPECTABLE via StateInspect stateVarName") {
-    // The ops loop closes over the new variant too: a stuck/overgrown
-    // encoded batcher's checkpoint answers "which (batcher, batchKey)
-    // holds the open buffer, and how big" offline — TWS stores are
-    // addressed by state VARIABLE name ("open"), not store name.
-    EmitProbeS.clear()
-    implicit val sql: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val checkpoint = java.nio.file.Files.createTempDirectory("graft-enc-inspect").toString
-    val s1 = MemoryStream[Message[PayV1]]
-    val q1 = KeyedBatcher.encoded(s1.toDS(), batchSize = 100, batchTimeoutMs = 600000).writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.ProcessingTime(100))
-      .foreachBatch { (ds: org.apache.spark.sql.Dataset[EmittedBatch[PayV1]], _: Long) =>
-        ds.collect().foreach(b => EmitProbeS.emitted.add((b.trigger, b.messages.map(_.data.s))))
-        ()
-      }
-      .start()
-    try {
-      s1.addData((1 to 5).map(i =>
-        Message(PayV1(s"m$i"), metadata = Map("seq" -> i.toString), batchKey = "hot")))
-      val deadline = System.currentTimeMillis() + 60000
-      def consumed(): Long = q1.recentProgress.map(_.numInputRows).sum
-      while (consumed() < 5 && System.currentTimeMillis() < deadline) Thread.sleep(100)
-      assert(consumed() >= 5)
-      Thread.sleep(500)
-    } finally q1.stop()
-    val rows = graft.streaming.StateInspect
-      .stateRows(spark, checkpoint, stateVarName = Some("open")).collect()
-    assert(rows.length == 1, s"expected the one open group, got ${rows.toSeq}")
-    val key = rows.head.getStruct(rows.head.fieldIndex("key"))
-    assert(key.toSeq.contains("hot"), s"group key not visible: $key")
-    val hot = graft.streaming.StateInspect
-      .hotKeys(spark, checkpoint, stateVarName = Some("open"), topK = 1).collect()
-    assert(hot.length == 1 && hot.head.getAs[Long]("state_rows") == 1L)
-    assert(hot.head.getAs[Long]("state_bytes_est") > 0L)
   }
 
   test("incremental: same size/timeout semantics on list state (shared foldGroup core)") {
@@ -410,12 +368,12 @@ class KeyedBatcherSpec extends SparkSpec {
     } finally query.stop()
   }
 
-  test("incremental == encoded: deterministic differential across keys, flush modes, and wave splits") {
+  test("incremental == apply: deterministic differential across keys, flush modes, and wave splits") {
     // Same message sequence (3 batch keys, interleaved, flush messages,
-    // size boundaries straddling waves) through BOTH transformWithState
-    // backends with an unreachable timeout — emitted batches must be
-    // identical per key, in order, trigger included. The append fast
-    // path must be invisible in the output.
+    // size boundaries straddling waves) through BOTH state backends with
+    // an unreachable timeout — emitted batches must be identical per key,
+    // in order, trigger included. The append fast path must be invisible
+    // in the output; apply's whole-buffer fold is the reference.
     implicit val sql: org.apache.spark.sql.SQLContext = spark.sqlContext
     val msgs = (1 to 60).map { i =>
       Message(
@@ -452,10 +410,10 @@ class KeyedBatcherSpec extends SparkSpec {
       Iterator.continually(out.poll()).takeWhile(_ != null).toSeq
         .sortBy(b => (b._1, b._3.head.drop(1).toInt))
     }
-    val enc = run(ds => KeyedBatcher.encoded(ds, batchSize = 7, batchTimeoutMs = 600000))
+    val ref = run(ds => KeyedBatcher(ds, batchSize = 7, batchTimeoutMs = 600000))
     val inc = run(ds => KeyedBatcher.incremental(ds, batchSize = 7, batchTimeoutMs = 600000))
-    assert(enc.nonEmpty, "differential is vacuous — nothing emitted")
-    assert(inc == enc, s"backends diverged:\nencoded=$enc\nincremental=$inc")
+    assert(ref.nonEmpty, "differential is vacuous — nothing emitted")
+    assert(inc == ref, s"backends diverged:\napply=$ref\nincremental=$inc")
   }
 
   test("incremental: buffered rows are per-message list state, inspectable and restart-drainable") {
@@ -496,6 +454,14 @@ class KeyedBatcherSpec extends SparkSpec {
     val hot = graft.streaming.StateInspect
       .hotKeys(spark, checkpoint, stateVarName = Some("buf"), topK = 1, rankBy = "rows").collect()
     assert(hot.length == 1 && hot.head.getAs[Long]("state_rows") == 6L)
+    assert(hot.head.getAs[Long]("state_bytes_est") > 0L)
+    // the value-state variable: one "meta" row for the one open group,
+    // its (batcher, batchKey) key visible
+    val meta = graft.streaming.StateInspect
+      .stateRows(spark, checkpoint, stateVarName = Some("meta")).collect()
+    assert(meta.length == 1, s"expected the one open group, got ${meta.toSeq}")
+    val key = meta.head.getStruct(meta.head.fieldIndex("key"))
+    assert(key.toSeq.contains("hot"), s"group key not visible: $key")
     // restart with batchSize 7: one more message tips the recovered
     // 6-message buffer over the size trigger — the checkpointed list
     // state must drain in order (placeholder blocks align the offsets)

@@ -105,6 +105,38 @@ object SplitterPropSpec extends Properties("BatchSplitter") {
       agreeOn(None, batchSize = bs, p1, p2, now2 = 50L)
     }
 
+  // ---- one rule within and across micro-batches -----------------------
+  // The pipeline chunks each micro-batch with splitBatches; KeyedBatcher
+  // carries the open batch to the next trigger. Cutting a message list
+  // anywhere and folding the parts in two triggers with a live deadline
+  // must emit the same size/flush batches as one splitBatches call, and
+  // leave open exactly that call's trailing "timeout" chunk.
+  private def waveSplitInvariant(
+      bc: BatcherConfig[Int],
+      part1: List[Message[Int]],
+      part2: List[Message[Int]]): Boolean = {
+    import graft.streaming.KeyedBatcher
+    def fold(prior: Option[(Vector[Message[Int]], Long, Long)], now: Long, ms: List[Message[Int]]) =
+      KeyedBatcher.foldGroup("b", "k", prior, now, ms,
+        bc.batchSize, batchTimeoutMs = 100L, splitter = bc.batchSplitter)
+    val (e1, st1) = fold(None, 0L, part1)
+    val (e2, st2) = fold(st1, 50L, part2)
+    val whole = Pipeline.splitBatches(part1 ++ part2, bc)
+    val (closed, trailing) = whole.partition(_._2 != "timeout")
+    (e1 ++ e2).map(b => (b.messages, b.trigger)) == closed &&
+    st2.map(_._1).toList == trailing.map(_._1)
+  }
+
+  property("one rule: two-wave foldGroup equals splitBatches, splitter") =
+    forAll(flushyMsgsGen, flushyMsgsGen) { (p1, p2) =>
+      waveSplitInvariant(bc, p1, p2)
+    }
+
+  property("one rule: two-wave foldGroup equals splitBatches, fixed size") =
+    forAll(flushyMsgsGen, flushyMsgsGen, Gen.chooseNum(1, 12)) { (p1, p2, bs) =>
+      waveSplitInvariant(BatcherConfig[Int]("default", batchSize = bs), p1, p2)
+    }
+
   property("appendOnlyAcc agrees with foldGroup: overdue deadline fires") =
     forAll(flushyMsgsGen, flushyMsgsGen) { (p1, p2) =>
       agreeOn(Some(splitter), batchSize = 1 << 20, p1, p2, now2 = 5000L) &&
