@@ -7,7 +7,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.ack.Acknowledger
 import graft.config.{BatcherConfig, PipelineConfig}
 import graft.model.{BatchInfo, Message, MessageStatus}
-import graft.runtime.{PipelineRegistry, StageCounters, StageMetrics}
+import graft.runtime.{LocalCheckpointFileManager, PipelineRegistry, StageCounters, StageMetrics}
 import graft.streaming.KeyedBatcher
 
 /** The pipeline engine: Broadway's producer → processor → batcher →
@@ -32,6 +32,18 @@ import graft.streaming.KeyedBatcher
   *    ackRef per task — each batch processor acks its own messages right
   *    after `handle_batch` (batch_processor_stage.ex:86-93); failed messages
   *    pass through `handleFailed` first (broadway.ex:1031-1056).
+  *
+  * Checkpoint logs: every micro-batch writes one offset-log and one
+  * commit-log entry, the ack ledger. `start` names
+  * [[graft.runtime.LocalCheckpointFileManager]] as the session's
+  * `spark.sql.streaming.checkpointFileManagerClass` when it is unset, so
+  * on a local `file:` checkpoint each entry is written with java.nio
+  * (temp file, then an atomic rename or a no-clobber link) instead of
+  * Hadoop's local filesystem, which without native-hadoop starts a child
+  * process per `chmod` and `readlink`. A manager the user has set is left
+  * as it is, and other filesystems (HDFS, S3) go to Spark's default. The
+  * setting stays on the session, so its later streaming queries use the
+  * manager too.
   *
   * Scale: nothing here collects to the driver. The only wide edge is the
   * (batcher, batchKey) shuffle (plus the `partitionBy` one when set); the
@@ -61,14 +73,18 @@ object Pipeline {
   }
 
   /** Process one micro-batch (or one batch DataFrame) through the full
-    * stage chain. Returns the messages with final statuses (post-batch).
+    * stage chain in one action: every stage runs and every message is acked
+    * once, by the task that finishes it. Nothing is returned: the
+    * post-batch messages exist only inside that action, and re-evaluating
+    * the chain would run every `handleMessage`/`handleBatch` and ack every
+    * message a second time.
     */
   def processBatch[A](
       ds: Dataset[Message[A]],
       config: PipelineConfig[A],
       acknowledger: Acknowledger,
       counters: Option[StageCounters] = None
-  )(implicit enc: Encoder[Message[A]]): Dataset[Message[A]] = {
+  )(implicit enc: Encoder[Message[A]]): Unit = {
     implicit val keyEnc: Encoder[(String, String)] = Encoders.tuple(Encoders.STRING, Encoders.STRING)
     implicit val strEnc: Encoder[String] = Encoders.STRING
 
@@ -77,7 +93,7 @@ object Pipeline {
     val prepare = config.prepareMessages
     val handle = config.handleMessage
 
-    def runProcessor(msgs: Seq[Message[A]]): Iterator[Message[A]] = {
+    def runProcessor(msgs: IndexedSeq[Message[A]]): Iterator[Message[A]] = {
       // prepare_messages crash containment (processor_stage.ex:122-147):
       // a raise — or returning fewer/more messages than given, which the
       // reference validates and raises on (processor_stage.ex:226-232) —
@@ -109,8 +125,11 @@ object Pipeline {
               // message.ex:135-155): newly-attached ack options pass through
               // the acknowledger, which validates/normalizes them; a raise
               // here crashes the message like any handler crash.
+              // Unchanged metadata (the common case) cannot carry new ack
+              // options, so the two option scans are skipped.
               val o2 =
-                if (o.ackOptions != m.ackOptions) o.withAckOptions(acknowledger.configure(o.ackRef, o.ackOptions))
+                if ((o.metadata ne m.metadata) && o.ackOptions != m.ackOptions)
+                  o.withAckOptions(acknowledger.configure(o.ackRef, o.ackOptions))
                 else o
               if (hasBatchers && !batcherNames.contains(o2.batcher))
                 // reference raises on unknown batcher (processor_stage.ex:213-224);
@@ -141,7 +160,7 @@ object Pipeline {
             runProcessor(seqSorted(it))
           }
       case None =>
-        // it.toSeq materializes the partition: prepare_messages is a
+        // it.toIndexedSeq materializes the partition: prepare_messages is a
         // BATCH-wide callback (broadway.ex:234-258 hands the whole
         // demand batch to the user), so the opaque typed path cannot
         // stream row-by-row. The memory guard at scale is ADMISSION,
@@ -149,7 +168,7 @@ object Pipeline {
         // bound a micro-batch (and with it every partition's slice)
         // exactly like Broadway's max_demand bounds the batch the
         // reference hands its processors.
-        ds.mapPartitions(it => runProcessor(it.toSeq))
+        ds.mapPartitions(it => runProcessor(it.toIndexedSeq))
     }
 
     val afterBatches: Dataset[Message[A]] =
@@ -261,7 +280,6 @@ object Pipeline {
     // The one action of the micro-batch: runs every stage, acks included;
     // it brings back one ackRef per (task, ackRef), not the messages.
     acked.collect()
-    afterBatches
   }
 
   /** Chunk one (batcher, batchKey) group into batches with trigger labels:
@@ -298,6 +316,7 @@ object Pipeline {
       case Right(_)  => ()
     }
     config.prepareForStart()
+    useLocalCheckpointLogs(spark)
     val counters = StageCounters.create(spark.sparkContext, config.name, config.batchers.map(_.name))
     def build(): StreamingQuery = {
       val writer = source.writeStream
@@ -306,7 +325,6 @@ object Pipeline {
         .trigger(Trigger.ProcessingTime(config.triggerIntervalMs))
         .foreachBatch { (df: Dataset[Message[A]], _: Long) =>
           processBatch(df, config, acknowledger, Some(counters))
-          ()
         }
       config.checkpointLocation.foreach(writer.option("checkpointLocation", _))
       writer.start()
@@ -332,6 +350,19 @@ object Pipeline {
     }
     running
   }
+
+  private val CheckpointFileManagerKey = "spark.sql.streaming.checkpointFileManagerClass"
+
+  /** Name [[LocalCheckpointFileManager]] as the session's checkpoint file
+    * manager unless a manager is already set, in the session conf or in
+    * the Hadoop conf (a user's own manager wins). It is set on the caller's
+    * session, not a clone, so the session's `StreamingQueryListener`s keep
+    * seeing the query.
+    */
+  private def useLocalCheckpointLogs(spark: SparkSession): Unit =
+    if (spark.conf.getOption(CheckpointFileManagerKey).isEmpty &&
+        spark.sparkContext.hadoopConfiguration.get(CheckpointFileManagerKey) == null)
+      spark.conf.set(CheckpointFileManagerKey, classOf[LocalCheckpointFileManager].getName)
 
   /** Analog of `Broadway.process_name/2` (broadway.ex:1058-1081): the
     * canonical name for a pipeline component — used as accumulator / query

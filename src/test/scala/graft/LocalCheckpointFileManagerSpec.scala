@@ -1,0 +1,118 @@
+package graft
+
+import java.net.URI
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Path => NioPath}
+import scala.jdk.CollectionConverters._
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileAlreadyExistsException, Path, RawLocalFileSystem}
+import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager, FileContextBasedCheckpointFileManager, FileSystemBasedCheckpointFileManager}
+import org.scalatest.funsuite.AnyFunSuite
+import graft.runtime.LocalCheckpointFileManager
+
+/** The local disk under a `fake:` scheme that has no `FileContext`
+  * binding: a non-`file:` filesystem that needs no network.
+  */
+class FakeSchemeFileSystem extends RawLocalFileSystem {
+  override def getUri: URI = URI.create("fake:///")
+  override def getScheme: String = "fake"
+}
+
+/** `LocalCheckpointFileManager`: java.nio atomic writes on `file:` paths,
+  * Spark's default manager for everything else.
+  */
+class LocalCheckpointFileManagerSpec extends AnyFunSuite {
+
+  private val conf = new Configuration()
+  conf.set("fs.fake.impl", classOf[FakeSchemeFileSystem].getName)
+  conf.setBoolean("fs.fake.impl.disable.cache", true)
+
+  private def withDir(f: NioPath => Unit): Unit = {
+    val dir = Files.createTempDirectory("graft-ckpt-fm")
+    try f(dir)
+    finally Files.walk(dir).iterator.asScala.toSeq.reverse.foreach(Files.deleteIfExists)
+  }
+
+  private def hpath(p: NioPath): Path = new Path(p.toUri)
+
+  private def write(fm: CheckpointFileManager, p: Path, text: String, overwrite: Boolean): Unit = {
+    val out = fm.createAtomic(p, overwrite)
+    try {
+      out.write(text.getBytes(UTF_8))
+      out.close()
+    } catch {
+      case e: Throwable =>
+        out.cancel()
+        throw e
+    }
+  }
+
+  private def read(fm: CheckpointFileManager, p: Path): String = {
+    val in = fm.open(p)
+    try new String(in.readAllBytes(), UTF_8)
+    finally in.close()
+  }
+
+  private def names(dir: NioPath): Set[String] =
+    Files.list(dir).iterator.asScala.map(_.getFileName.toString).toSet
+
+  test("a local write lands atomically with no .crc or temp sibling left") {
+    withDir { dir =>
+      val fm = new LocalCheckpointFileManager(hpath(dir), conf)
+      write(fm, hpath(dir.resolve("0")), "v1\n{}", overwrite = false)
+      assert(names(dir) == Set("0"), "no Hadoop ChecksumFs .crc and no temp file")
+      assert(read(fm, hpath(dir.resolve("0"))) == "v1\n{}")
+    }
+  }
+
+  test("no-clobber: an existing entry raises Hadoop's FileAlreadyExistsException and survives") {
+    withDir { dir =>
+      val fm = new LocalCheckpointFileManager(hpath(dir), conf)
+      val p = hpath(dir.resolve("0"))
+      write(fm, p, "first", overwrite = false)
+      intercept[FileAlreadyExistsException](write(fm, p, "second", overwrite = false))
+      assert(read(fm, p) == "first")
+      assert(names(dir) == Set("0"), "the failed write's temp file is removed")
+    }
+  }
+
+  test("overwrite replaces the file and drops the stale .crc of Spark's default manager") {
+    withDir { dir =>
+      val p = hpath(dir.resolve("1.delta"))
+      val sparkDefault = new FileContextBasedCheckpointFileManager(hpath(dir), conf)
+      write(sparkDefault, p, "old", overwrite = false)
+      assert(names(dir) == Set("1.delta", ".1.delta.crc"))
+      val fm = new LocalCheckpointFileManager(hpath(dir), conf)
+      write(fm, p, "new and longer content", overwrite = true)
+      assert(names(dir) == Set("1.delta"))
+      assert(read(fm, p) == "new and longer content")
+      // Hadoop's LocalFileSystem verifies a .crc sibling on read: a stale
+      // one would fail this with a ChecksumException
+      assert(read(new FileSystemBasedCheckpointFileManager(hpath(dir), conf), p) == "new and longer content")
+    }
+  }
+
+  test("cancel leaves neither the target nor a temp file") {
+    withDir { dir =>
+      val fm = new LocalCheckpointFileManager(hpath(dir), conf)
+      val out = fm.createAtomic(hpath(dir.resolve("2")), overwriteIfPossible = false)
+      out.write("partial".getBytes(UTF_8))
+      out.cancel()
+      out.close() // a cancelled stream's close is a no-op
+      assert(names(dir).isEmpty)
+    }
+  }
+
+  test("a path that is not file: goes to Spark's default manager") {
+    withDir { dir =>
+      val root = new Path(s"fake://${dir.toUri.getPath}")
+      val fm = new LocalCheckpointFileManager(root, conf)
+      val out = fm.createAtomic(new Path(root, "0"), overwriteIfPossible = false)
+      assert(out.isInstanceOf[CheckpointFileManager.RenameBasedFSDataOutputStream])
+      out.write("delegated".getBytes(UTF_8))
+      out.close()
+      assert(new String(Files.readAllBytes(dir.resolve("0")), UTF_8) == "delegated")
+      assert(read(fm, new Path(root, "0")) == "delegated")
+    }
+  }
+}

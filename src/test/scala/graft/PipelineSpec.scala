@@ -1,10 +1,19 @@
 package graft
 
+import java.nio.file.Files
 import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager
+import org.apache.spark.sql.functions.col
+import graft.ack.{AckCollector, CallerAcknowledger}
 import graft.config.{BatcherConfig, BatchSplitter, PipelineConfig, RateLimiting}
+import graft.core.Pipeline
 import graft.model.{BatchInfo, Message}
-import graft.runtime.PipelineRegistry
+import graft.runtime.{LocalCheckpointFileManager, PipelineRegistry}
+import graft.sources.QueueSource
 import graft.testkit.TestPipeline
 
 /** Records what reaches handleBatch — executor-side static (same JVM in
@@ -38,6 +47,18 @@ object BatchProbe {
   def clear(): Unit = batches.clear()
 }
 
+/** A user's own checkpoint file manager: Spark's default, counting the
+  * instances Spark creates from the session conf.
+  */
+class CountingCheckpointFileManager(path: Path, conf: Configuration)
+    extends FileContextBasedCheckpointFileManager(path, conf) {
+  CountingCheckpointFileManager.created.incrementAndGet()
+}
+
+object CountingCheckpointFileManager {
+  val created = new AtomicInteger(0)
+}
+
 /** End-to-end pipeline scenarios mirroring /root/reference/test/
   * broadway_test.exs (cites per test).
   */
@@ -47,6 +68,86 @@ class PipelineSpec extends SparkSpec {
 
   private def simpleConfig(name: String): PipelineConfig[Int] =
     PipelineConfig[Int](name = name)
+
+  private val FileManagerKey = "spark.sql.streaming.checkpointFileManagerClass"
+  private val SparkDefaultManager = classOf[FileContextBasedCheckpointFileManager].getName
+
+  /** Runs `f` with the session's checkpoint file manager set to `cls`
+    * (`None`: unset), then restores the previous setting.
+    */
+  private def withFileManager[T](cls: Option[String])(f: => T): T = {
+    def put(v: Option[String]): Unit = v.fold(spark.conf.unset(FileManagerKey))(spark.conf.set(FileManagerKey, _))
+    val before = spark.conf.getOption(FileManagerKey)
+    put(cls)
+    try f
+    finally put(before)
+  }
+
+  /** One QueueSource pipeline run on `ckpt`: each group of `values` is
+    * pushed and processed as its own micro-batch, then the pipeline stops.
+    * Returns the batch ids this run added to the offset log, each with
+    * whether it has a Hadoop `.crc` sibling.
+    */
+  private def queueRun(queue: String, ckpt: java.nio.file.Path, collectorId: String, values: Seq[Seq[String]]) = {
+    val offsets = ckpt.resolve("offsets")
+    def batchIds: Set[String] =
+      if (!Files.isDirectory(offsets)) Set.empty
+      else offsets.toFile.list().filter(_.forall(_.isDigit)).toSet
+    val before = batchIds
+    val messages = spark.readStream
+      .format("graft.sources.QueueSourceProvider")
+      .option("queue", queue)
+      .load()
+      .select(col("offset"), col("value"))
+      .as[(Long, String)]
+      .map { case (off, v) => Message(v, metadata = Map("seq" -> off.toString)) }
+    val cfg = PipelineConfig[String](
+      name = s"ckpt-$queue",
+      batchers = Seq(BatcherConfig[String]("default", batchSize = 4)),
+      checkpointLocation = Some(ckpt.toString)
+    )
+    val running = Pipeline.start(spark, messages, cfg, CallerAcknowledger(collectorId))
+    try values.foreach { vs =>
+      QueueSource.get(queue).push(vs: _*)
+      running.processAllAvailable()
+    } finally running.stop()
+    (batchIds -- before).toSeq.sorted.map(id => id -> Files.exists(offsets.resolve(s".$id.crc")))
+  }
+
+  /** A checkpoint written under the `first` manager setting restarts under
+    * the `second`: every message is handled and acked exactly once, and
+    * the source's ack ledger commits each offset once, in order.
+    */
+  private def checkpointHandover(tag: String, first: Option[String], second: Option[String]): Unit = {
+    val queue = s"handover-$tag"
+    val collectorId = s"handover-acks-$tag"
+    val ckpt = Files.createTempDirectory("graft-ckpt-handover")
+    val v = (1 to 20).map(i => s"m$i")
+    QueueSource.create(queue, None)
+    try {
+      val run1 = withFileManager(first)(queueRun(queue, ckpt, collectorId, v.take(10).grouped(5).toSeq))
+      val run2 = withFileManager(second) {
+        val r = queueRun(queue, ckpt, collectorId, v.drop(10).grouped(5).toSeq)
+        assert(spark.conf.get(FileManagerKey) == second.getOrElse(classOf[LocalCheckpointFileManager].getName))
+        r
+      }
+      // Spark's default manager writes a .crc sibling per log entry; the
+      // java.nio path writes none
+      Seq(first -> run1, second -> run2).foreach { case (manager, ids) =>
+        assert(ids.size == 2, s"expected two micro-batches per run: $ids")
+        assert(ids.forall(_._2 == manager.contains(SparkDefaultManager)), s"$manager wrote $ids")
+      }
+      val acked = AckCollector.drain(collectorId).flatMap(_.successful).map(_.data.asInstanceOf[String])
+      assert(acked.sorted == v.sorted, s"not acked exactly once: $acked")
+      // the source commits a batch when the next one is planned, so the
+      // restart commits the first run's last batch and the final batch stays open
+      assert(QueueSource.get(queue).acks.flatten == v.take(15))
+    } finally {
+      QueueSource.remove(queue)
+      AckCollector.clear(collectorId)
+      Files.walk(ckpt).iterator.asScala.toSeq.reverse.foreach(Files.deleteIfExists)
+    }
+  }
 
   // dummy_producer_test.exs:12-28 — single message through, acked ok.
   test("single message flows through and is acked") {
@@ -693,5 +794,40 @@ class PipelineSpec extends SparkSpec {
       assert(byBatcher("small").flatMap(_._2).sorted == Seq(1, 2))
       assert(byBatcher("big").flatMap(_._2).sorted == Seq(20, 30))
     } finally tp.stop()
+  }
+
+  test("checkpoint of Spark's default manager restarts under graft's, each offset acked once") {
+    checkpointHandover("to-graft", first = Some(SparkDefaultManager), second = None)
+  }
+
+  test("checkpoint of graft's manager restarts under Spark's default, each offset acked once") {
+    checkpointHandover("to-spark", first = None, second = Some(SparkDefaultManager))
+  }
+
+  test("Pipeline.start leaves a user-set checkpoint file manager in place") {
+    val user = classOf[CountingCheckpointFileManager].getName
+    def runOnce(name: String): Unit = {
+      CountingCheckpointFileManager.created.set(0)
+      val tp = new TestPipeline(spark, simpleConfig(name))
+      try {
+        tp.testBatch(1 to 3)
+        tp.processAllAvailable()
+        assert(tp.acks().flatMap(_.successful).map(_.data.asInstanceOf[Int]).sorted == Seq(1, 2, 3))
+      } finally tp.stop()
+      assert(CountingCheckpointFileManager.created.get > 0, "the query's logs did not use the user's manager")
+    }
+    withFileManager(Some(user)) {
+      runOnce("user-file-manager")
+      assert(spark.conf.get(FileManagerKey) == user)
+    }
+    // set through `spark.hadoop.*`, that is in the Hadoop conf only
+    val hadoopConf = spark.sparkContext.hadoopConfiguration
+    withFileManager(None) {
+      hadoopConf.set(FileManagerKey, user)
+      try {
+        runOnce("user-file-manager-hadoop")
+        assert(spark.conf.getOption(FileManagerKey).isEmpty)
+      } finally hadoopConf.unset(FileManagerKey)
+    }
   }
 }
