@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import scala.util.control.NonFatal
+import graft.runtime.{ProgressSnapshot, ProgressTotals}
 
 /** Benchmark entrypoint. Prints ONE compact JSON summary line on stdout
   * (the driver captures only the last ~2 KB of output, so the line must
@@ -31,56 +32,6 @@ import scala.util.control.NonFatal
   * cannot see.
   */
 object Bench {
-
-  /** Per-phase duration accumulation via a StreamingQueryListener, not
-    * `query.recentProgress`: recentProgress is a ring buffer capped at
-    * spark.sql.streaming.numRecentProgressUpdates (default 100) entries,
-    * so runs with more micro-batches silently undercount the attribution
-    * this exists to provide. The listener sees EVERY progress event.
-    * Events are delivered asynchronously on the listener bus; `drainTo`
-    * polls until the attached query's last executed batchId has been
-    * seen (bounded), so a scenario can read its totals right after
-    * stop() without racing the bus.
-    */
-  private final class ProgressAccumulator
-      extends org.apache.spark.sql.streaming.StreamingQueryListener {
-    import org.apache.spark.sql.streaming.StreamingQueryListener._
-    private val durations = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-    @volatile private var maxBatchId = -1L
-    @volatile private var filter: java.util.UUID = null
-    // peak state footprint across batches (sum over the query's state
-    // operators): rows + provider memory — the evidence behind the
-    // "size shuffle width to state volume / RocksDB for state beyond
-    // heap" guidance, straight from Spark's own progress metrics
-    @volatile var stateRowsMax = -1L
-    @volatile var stateMemMax = -1L
-    def attach(id: java.util.UUID): Unit = {
-      durations.clear(); maxBatchId = -1L; stateRowsMax = -1L; stateMemMax = -1L; filter = id
-    }
-    override def onQueryStarted(e: QueryStartedEvent): Unit = ()
-    override def onQueryProgress(e: QueryProgressEvent): Unit =
-      if (filter != null && e.progress.id == filter) {
-        e.progress.durationMs.forEach { (k, v) =>
-          durations.merge(k, v, (a, b) => java.lang.Long.valueOf(a + b))
-        }
-        val ops = e.progress.stateOperators
-        if (ops != null && ops.nonEmpty) {
-          stateRowsMax = math.max(stateRowsMax, ops.map(_.numRowsTotal).sum)
-          stateMemMax = math.max(stateMemMax, ops.map(_.memoryUsedBytes).sum)
-        }
-        if (e.progress.batchId > maxBatchId) maxBatchId = e.progress.batchId
-      }
-    override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
-    /** Totals once every batch up to `lastBatchId` has been delivered
-      * (or a 5 s drain bound passes — partial totals beat a hang).
-      */
-    def drainTo(lastBatchId: Long): Map[String, Long] = {
-      val deadline = System.nanoTime() + 5L * 1000 * 1000 * 1000
-      while (maxBatchId < lastBatchId && System.nanoTime() < deadline) Thread.sleep(10)
-      import scala.jdk.CollectionConverters._
-      durations.asScala.map { case (k, v) => k -> v.longValue }.toMap
-    }
-  }
 
   /** Run `body` with session confs temporarily overridden — streaming
     * queries clone the session conf at start(), so an override set here
@@ -112,9 +63,8 @@ object Bench {
       rows: Int,
       waves: Int,
       withBatcher: Boolean = true,
-      rateLimit: Option[(Int, Long)] = None,
-      acc: Option[ProgressAccumulator] = None
-  ): (Long, Double, Long, Long, Map[String, Long]) = {
+      rateLimit: Option[(Int, Long)] = None
+  ): (Long, Double, Long, Long, ProgressSnapshot) = {
     import spark.implicits._
     import graft.config.{BatcherConfig, PipelineConfig}
     import graft.core.Pipeline
@@ -158,9 +108,8 @@ object Bench {
           Seq(BatcherConfig[String]("default", batchSize = if (withBatcher) 200 else 1 << 20))
       )
       val running = Pipeline.start(spark, messages, cfg, NoopAcknowledger)
-      acc.foreach(_.attach(running.query.id))
-      try {
-        val perWave = rows / waves
+      val perWave = rows / waves
+      val (sec, processed, microBatches) = try {
         // payloads ~48 chars: enough bytes that serialization is visible,
         // deterministic content (no RNG) so runs are comparable
         val t0 = System.nanoTime()
@@ -183,19 +132,15 @@ object Bench {
             Thread.sleep(5)
           }
         }
-        val sec = (System.nanoTime() - t0) / 1e9
-        val processed = running.stageMetrics.map(_.processorProcessed).getOrElse(-1L)
-        val microBatches = Option(running.query.lastProgress).map(_.batchId + 1).getOrElse(-1L)
-        // per-phase attribution: Spark's own per-micro-batch durationMs
-        // (triggerExecution = whole batch; addBatch = the data plan;
-        // walCommit/commitOffsets/latestOffset = per-batch fixed costs) —
-        // summed across the run via the listener (every batch, not the
-        // capped recentProgress ring), this NAMES where a cadence shape
-        // spends its extra wall time relative to the burst shape
-        val durations: Map[String, Long] =
-          acc.map(_.drainTo(microBatches - 1)).getOrElse(Map.empty)
-        (perWave.toLong * waves, sec, processed, microBatches, durations)
+        ((System.nanoTime() - t0) / 1e9,
+          running.stageMetrics.map(_.processorProcessed).getOrElse(-1L),
+          Option(running.query.lastProgress).map(_.batchId + 1).getOrElse(-1L))
       } finally running.stop()
+      // per-phase attribution: Spark's own per-micro-batch durationMs,
+      // summed over every batch by the pipeline's progress totals — this
+      // NAMES where a cadence shape spends its extra wall time relative to
+      // the burst shape
+      (perWave.toLong * waves, sec, processed, microBatches, running.progress)
     } finally {
       QueueSource.remove(qName)
       limiter.foreach(_.shutdown())
@@ -209,11 +154,7 @@ object Bench {
     * stop() call itself (drain latency) plus the processed count proving
     * the guarantee held under load.
     */
-  private def drainScenario(
-      spark: SparkSession,
-      rows: Int,
-      acc: Option[ProgressAccumulator] = None
-  ): (Long, Double, Long, Map[String, Long]) = {
+  private def drainScenario(spark: SparkSession, rows: Int): (Long, Double, Long, ProgressSnapshot) = {
     import spark.implicits._
     import graft.config.{BatcherConfig, PipelineConfig}
     import graft.core.Pipeline
@@ -239,15 +180,12 @@ object Bench {
         batchers = Seq(BatcherConfig[String]("default", batchSize = 200))
       )
       val running = Pipeline.start(spark, messages, cfg, NoopAcknowledger)
-      acc.foreach(_.attach(running.query.id))
       q.push((0 until rows).map(i => s"evt-$i-payload-${i % 997}-abcdefghijklmnop"): _*)
       val t0 = System.nanoTime()
       running.stop() // graceful: drains the backlog before terminating
       val drainSec = (System.nanoTime() - t0) / 1e9
       val processed = running.stageMetrics.map(_.processorProcessed).getOrElse(-1L)
-      val batches = Option(running.query.lastProgress).map(_.batchId + 1).getOrElse(-1L)
-      val durations = acc.map(_.drainTo(batches - 1)).getOrElse(Map.empty)
-      (rows.toLong, drainSec, processed, durations)
+      (rows.toLong, drainSec, processed, running.progress)
     } finally QueueSource.remove(qName)
   }
 
@@ -261,7 +199,6 @@ object Bench {
   private def intervalJoinScenario(
       spark: SparkSession,
       rows: Int,
-      acc: Option[ProgressAccumulator] = None,
       provider: Option[String] = None,
       statefulPartitions: Option[Int] = None,
       extraConfs: Seq[(String, String)] = Nil,
@@ -273,7 +210,7 @@ object Bench {
       // what a user on defaults actually gets; conf-posture axes pass
       // None explicitly to preserve their historical meaning.
       opStatePartitions: Option[Int] = graft.streaming.EventTime.AutoStatePartitions
-  ): (Long, Double, Long, Long, Map[String, Long]) = {
+  ): (Long, Double, Long, Long, ProgressSnapshot) = {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
@@ -302,17 +239,14 @@ object Bench {
         .start()
     }
     // an operator-level statePartitions rebases the plan onto a CLONED
-    // session, and streaming listener events are per-session — register
-    // the accumulator with the query's own session or its progress (and
-    // state metrics) are invisible (the exact caveat bindStatePartitions
-    // documents for users)
-    val qSession = joined.sparkSession
-    val crossSession = qSession ne spark
-    if (crossSession) acc.foreach(qSession.streams.addListener)
-    acc.foreach(_.attach(q.id))
-    try {
-      val waves = 4
-      val perWave = perSide / waves
+    // session, and streaming listener events are per-session — the totals
+    // go on the query's own session or its progress (and state metrics)
+    // are invisible (the exact caveat bindStatePartitions documents for
+    // users)
+    val totals = ProgressTotals.of(q)
+    val waves = 4
+    val perWave = perSide / waves
+    val (sec, batches) = try {
       val t0 = System.nanoTime()
       var w = 0
       while (w < waves) {
@@ -325,14 +259,12 @@ object Bench {
         q.processAllAvailable()
         w += 1
       }
-      val sec = (System.nanoTime() - t0) / 1e9
-      val batches = Option(q.lastProgress).map(_.batchId + 1).getOrElse(-1L)
-      val durations = acc.map(_.drainTo(batches - 1)).getOrElse(Map.empty)
-      (2L * perWave * waves, sec, matched.get(), batches, durations)
+      ((System.nanoTime() - t0) / 1e9, Option(q.lastProgress).map(_.batchId + 1).getOrElse(-1L))
     } finally {
       q.stop()
-      if (crossSession) acc.foreach(qSession.streams.removeListener)
+      totals.close()
     }
+    (2L * perWave * waves, sec, matched.get(), batches, totals.snapshot)
   }
 
   /** Stream-stream bounded-lookback AS-OF throughput
@@ -346,11 +278,10 @@ object Bench {
   private def asofBoundedScenario(
       spark: SparkSession,
       rows: Int,
-      acc: Option[ProgressAccumulator] = None,
       statefulPartitions: Option[Int] = None,
       // defaults to the operator's own default posture (see intervalJoinScenario)
       opStatePartitions: Option[Int] = graft.streaming.EventTime.AutoStatePartitions
-  ): (Long, Double, Long, Long, Map[String, Long]) = {
+  ): (Long, Double, Long, Long, ProgressSnapshot) = {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
@@ -375,13 +306,10 @@ object Bench {
         .start()
     }
     // operator-level width ⇒ cloned session ⇒ per-session listener events
-    val qSession = joined.sparkSession
-    val crossSession = qSession ne spark
-    if (crossSession) acc.foreach(qSession.streams.addListener)
-    acc.foreach(_.attach(q.id))
-    try {
-      val waves = 4
-      val perWave = perSide / waves
+    val totals = ProgressTotals.of(q)
+    val waves = 4
+    val perWave = perSide / waves
+    val (sec, batches) = try {
       val t0 = System.nanoTime()
       var w = 0
       while (w < waves) {
@@ -393,72 +321,52 @@ object Bench {
         q.processAllAvailable()
         w += 1
       }
-      val sec = (System.nanoTime() - t0) / 1e9
-      val batches = Option(q.lastProgress).map(_.batchId + 1).getOrElse(-1L)
-      val durations = acc.map(_.drainTo(batches - 1)).getOrElse(Map.empty)
-      (2L * perWave * waves, sec, emitted.get(), batches, durations)
+      ((System.nanoTime() - t0) / 1e9, Option(q.lastProgress).map(_.batchId + 1).getOrElse(-1L))
     } finally {
       q.stop()
-      if (crossSession) acc.foreach(qSession.streams.removeListener)
+      totals.close()
     }
+    (2L * perWave * waves, sec, emitted.get(), batches, totals.snapshot)
   }
 
-  /** All five streaming scenarios as one JSON object. burst/sustained/
-    * single_group triangulate the keyed-batching and cadence costs;
-    * rate_limited measures the admission machinery (25k tokens / 100 ms =
-    * 250k rows/s cap — above pipeline throughput, so the delta vs burst
-    * is bookkeeping + replenish cadence, not a binding limit); drain
-    * measures the graceful-shutdown guarantee under a full backlog.
-    */
-  private[graft] def streamingBlockJson(spark: SparkSession, rows: Int): String = {
-    val acc = new ProgressAccumulator
-    spark.streams.addListener(acc)
-    try streamingBlockJsonInner(spark, rows, acc)
-    finally spark.streams.removeListener(acc)
-  }
+  /** A scenario's per-phase durations, largest first. */
+  private def durJson(p: ProgressSnapshot): String =
+    p.durationsMs.toSeq.sortBy(-_._2).map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
 
   /** The bounded as-of variants (default width / width 8) for scale runs —
     * `StreamBench` dispatches here when SPARK_GRAFT_STREAM_ONLY=asof_bounded.
     */
   private[graft] def asofBoundedBlockJson(spark: SparkSession, rows: Int): String = {
-    val acc0 = new ProgressAccumulator
-    spark.streams.addListener(acc0)
-    try {
-      val acc = Some(acc0)
-      asofBoundedScenario(spark, math.min(rows / 10, 20000))
-      var defaultStateBytes = -1L
-      val variants = Seq(
-        ("asof_bounded", None, None),
-        ("asof_bounded_p8", Some(8), None),
-        // closed loop: width from the DEFAULT run's measured peak state
-        // via the heuristic, applied through the operator parameter
-        ("asof_bounded_auto", None, Some(())) // resolved below once defaultStateBytes is known
-      ).map { case (name, parts, auto) =>
-        val opParts: Option[Int] = (name, auto) match {
-          case (_, Some(_)) => Some(
-            graft.streaming.EventTime.statePartitionsForVolume(math.max(0L, defaultStateBytes)))
-          // the headline axis runs the operator DEFAULT (auto floor) —
-          // proving default == auto is the point of the triangle now
-          case ("asof_bounded", _) => graft.streaming.EventTime.AutoStatePartitions
-          // hand-set session-conf axes keep the conf posture (None = inherit)
-          case _ => None
-        }
-        val (r, sec, emitted, batches, dur) =
-          asofBoundedScenario(spark, rows, acc = acc, statefulPartitions = parts,
-            opStatePartitions = opParts)
-        if (name == "asof_bounded") defaultStateBytes = acc0.stateMemMax
-        val widthJson = opParts match {
-          case s if s.asInstanceOf[AnyRef] eq graft.streaming.EventTime.AutoStatePartitions =>
-            ""","width":"auto""""
-          case Some(p) => s""","width":$p"""
-          case None => ""
-        }
-        val durJson =
-          dur.toSeq.sortBy(-_._2).map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
-        s""""$name":{"sec":${math.round(sec * 1000) / 1000.0},"rows_per_sec":${math.round(r / sec)},"emitted":$emitted,"micro_batches":$batches,"state_rows_max":${acc0.stateRowsMax},"state_mem_mb":${acc0.stateMemMax / (1 << 20)}$widthJson,"durations_ms":$durJson}"""
+    asofBoundedScenario(spark, math.min(rows / 10, 20000))
+    var defaultStateBytes = -1L
+    val variants = Seq(
+      ("asof_bounded", None, None),
+      ("asof_bounded_p8", Some(8), None),
+      // closed loop: width from the DEFAULT run's measured peak state
+      // via the heuristic, applied through the operator parameter
+      ("asof_bounded_auto", None, Some(())) // resolved below once defaultStateBytes is known
+    ).map { case (name, parts, auto) =>
+      val opParts: Option[Int] = (name, auto) match {
+        case (_, Some(_)) => Some(
+          graft.streaming.EventTime.statePartitionsForVolume(math.max(0L, defaultStateBytes)))
+        // the headline axis runs the operator DEFAULT (auto floor) —
+        // proving default == auto is the point of the triangle now
+        case ("asof_bounded", _) => graft.streaming.EventTime.AutoStatePartitions
+        // hand-set session-conf axes keep the conf posture (None = inherit)
+        case _ => None
       }
-      s"""{"rows":$rows,${variants.mkString(",")}}"""
-    } finally spark.streams.removeListener(acc0)
+      val (r, sec, emitted, batches, p) =
+        asofBoundedScenario(spark, rows, statefulPartitions = parts, opStatePartitions = opParts)
+      if (name == "asof_bounded") defaultStateBytes = p.stateMemMax
+      val widthJson = opParts match {
+        case s if s.asInstanceOf[AnyRef] eq graft.streaming.EventTime.AutoStatePartitions =>
+          ""","width":"auto""""
+        case Some(w) => s""","width":$w"""
+        case None => ""
+      }
+      s""""$name":{"sec":${math.round(sec * 1000) / 1000.0},"rows_per_sec":${math.round(r / sec)},"emitted":$emitted,"micro_batches":$batches,"state_rows_max":${p.stateRowsMax},"state_mem_mb":${p.stateMemMax / (1 << 20)}$widthJson,"durations_ms":${durJson(p)}}"""
+    }
+    s"""{"rows":$rows,${variants.mkString(",")}}"""
   }
 
   /** Just the stream-stream interval-join variants (default / RocksDB /
@@ -470,43 +378,37 @@ object Bench {
     * RocksDB holds at bigger state.
     */
   private[graft] def intervalJoinBlockJson(spark: SparkSession, rows: Int): String = {
-    val acc0 = new ProgressAccumulator
-    spark.streams.addListener(acc0)
-    try {
-      val acc = Some(acc0)
-      // untimed warmup at a fraction of the size: codegen + state-store
-      // init otherwise lands on the first variant
-      intervalJoinScenario(spark, math.min(rows / 10, 20000))
-      // changelog checkpointing is the deployment flag that amortizes
-      // RocksDB's per-commit cost (upload a changelog, snapshot in the
-      // background) — the scale path measures whether it closes the
-      // provider's throughput gap at heap-sized state
-      val changelog = Seq(
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true")
-      val variants = Seq(
-        ("interval_join", None, None, Nil),
-        ("interval_join_rocksdb", Some(RocksDbProvider), None, Nil),
-        ("interval_join_p8", None, Some(8), Nil),
-        ("interval_join_rocksdb_p8", Some(RocksDbProvider), Some(8), Nil),
-        ("interval_join_rocksdb_p8_changelog", Some(RocksDbProvider), Some(8), changelog)
-      ).map { case (name, prov, parts, extra) =>
-        val (r, sec, matched, batches, dur) =
-          intervalJoinScenario(spark, rows, acc = acc, provider = prov,
-            statefulPartitions = parts, extraConfs = extra)
-        val durJson =
-          dur.toSeq.sortBy(-_._2).map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
-        s""""$name":{"sec":${math.round(sec * 1000) / 1000.0},"rows_per_sec":${math.round(r / sec)},"matched":$matched,"micro_batches":$batches,"state_rows_max":${acc0.stateRowsMax},"state_mem_mb":${acc0.stateMemMax / (1 << 20)},"durations_ms":$durJson}"""
-      }
-      s"""{"rows":$rows,${variants.mkString(",")}}"""
-    } finally spark.streams.removeListener(acc0)
+    // untimed warmup at a fraction of the size: codegen + state-store
+    // init otherwise lands on the first variant
+    intervalJoinScenario(spark, math.min(rows / 10, 20000))
+    // changelog checkpointing is the deployment flag that amortizes
+    // RocksDB's per-commit cost (upload a changelog, snapshot in the
+    // background) — the scale path measures whether it closes the
+    // provider's throughput gap at heap-sized state
+    val changelog = Seq(
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true")
+    val variants = Seq(
+      ("interval_join", None, None, Nil),
+      ("interval_join_rocksdb", Some(RocksDbProvider), None, Nil),
+      ("interval_join_p8", None, Some(8), Nil),
+      ("interval_join_rocksdb_p8", Some(RocksDbProvider), Some(8), Nil),
+      ("interval_join_rocksdb_p8_changelog", Some(RocksDbProvider), Some(8), changelog)
+    ).map { case (name, prov, parts, extra) =>
+      val (r, sec, matched, batches, p) =
+        intervalJoinScenario(spark, rows, provider = prov, statefulPartitions = parts, extraConfs = extra)
+      s""""$name":{"sec":${math.round(sec * 1000) / 1000.0},"rows_per_sec":${math.round(r / sec)},"matched":$matched,"micro_batches":$batches,"state_rows_max":${p.stateRowsMax},"state_mem_mb":${p.stateMemMax / (1 << 20)},"durations_ms":${durJson(p)}}"""
+    }
+    s"""{"rows":$rows,${variants.mkString(",")}}"""
   }
 
-  private def streamingBlockJsonInner(
-      spark: SparkSession,
-      rows: Int,
-      acc0: ProgressAccumulator
-  ): String = {
-    val acc = Some(acc0)
+  /** All five streaming scenarios as one JSON object. burst/sustained/
+    * single_group triangulate the keyed-batching and cadence costs;
+    * rate_limited measures the admission machinery (25k tokens / 100 ms =
+    * 250k rows/s cap — above pipeline throughput, so the delta vs burst
+    * is bookkeeping + replenish cadence, not a binding limit); drain
+    * measures the graceful-shutdown guarantee under a full backlog.
+    */
+  private[graft] def streamingBlockJson(spark: SparkSession, rows: Int): String = {
     // SPARK_GRAFT_STATE_PROVIDER=rocksdb runs the WHOLE block (the
     // pipeline scenarios' batcher state included) on the RocksDB state
     // store — the provider a 100 TB-state deployment would pick; default
@@ -566,20 +468,19 @@ object Bench {
       // whichever scenario runs first and corrupts the cross-scenario
       // deltas the block exists to attribute
       streamingScenario(spark, math.min(rows / 10, 20000), waves = 1)
-      val (bRows, bSec, bProc, bBatches, bDur) = streamingScenario(spark, rows, waves = 1, acc = acc)
-      val (sRows, sSec, sProc, sBatches, sDur) = streamingScenario(spark, rows, waves = 8, acc = acc)
-      val (mRows, mSec, mProc, mBatches, mDur) =
-        streamingScenario(spark, rows, waves = 1, withBatcher = false, acc = acc)
-      val (rRows, rSec, rProc, rBatches, rDur) =
-        streamingScenario(spark, rows, waves = 1, rateLimit = Some((25000, 100L)), acc = acc)
-      val (dRows, dSec, dProc, dDur) = drainScenario(spark, rows, acc = acc)
+      val (bRows, bSec, bProc, bBatches, bP) = streamingScenario(spark, rows, waves = 1)
+      val (sRows, sSec, sProc, sBatches, sP) = streamingScenario(spark, rows, waves = 8)
+      val (mRows, mSec, mProc, mBatches, mP) =
+        streamingScenario(spark, rows, waves = 1, withBatcher = false)
+      val (rRows, rSec, rProc, rBatches, rP) =
+        streamingScenario(spark, rows, waves = 1, rateLimit = Some((25000, 100L)))
+      val (dRows, dSec, dProc, dP) = drainScenario(spark, rows)
       // the stream-stream join, attributed: default provider/width as the
       // headline, then the two knobs a deployment would turn — RocksDB
       // state store and a narrower stateful shuffle (the join pays
       // 4 state-store commits × partitions × micro-batches regardless of
       // data volume, so at bench scale store fixed costs dominate; the
       // variants put numbers on exactly that)
-      def state() = (acc0.stateRowsMax, acc0.stateMemMax)
       // untimed join-specific warmup: the stream-stream join's own
       // codegen + 4-store state machinery is NOT covered by the pipeline
       // warmup above, and since the headline axis became the operator
@@ -587,32 +488,23 @@ object Bench {
       // thing separating default from the auto axis — warm it so the
       // default==auto comparison is apples-to-apples
       intervalJoinScenario(spark, math.min(rows / 10, 20000))
-      val (ijRows, ijSec, ijMatched, ijBatches, ijDur) = intervalJoinScenario(spark, rows, acc = acc)
-      val ijState = state()
-      val (_, rkSec, rkMatched, _, rkDur) =
-        intervalJoinScenario(spark, rows, acc = acc, provider = Some(RocksDbProvider),
+      val (ijRows, ijSec, ijMatched, ijBatches, ijP) = intervalJoinScenario(spark, rows)
+      val (_, rkSec, rkMatched, _, rkP) =
+        intervalJoinScenario(spark, rows, provider = Some(RocksDbProvider), opStatePartitions = None)
+      val (_, p8Sec, p8Matched, _, p8P) =
+        intervalJoinScenario(spark, rows, statefulPartitions = Some(8), opStatePartitions = None)
+      val (_, rkp8Sec, rkp8Matched, _, rkp8P) =
+        intervalJoinScenario(spark, rows, provider = Some(RocksDbProvider), statefulPartitions = Some(8),
           opStatePartitions = None)
-      val rkState = state()
-      val (_, p8Sec, p8Matched, _, p8Dur) =
-        intervalJoinScenario(spark, rows, acc = acc, statefulPartitions = Some(8),
-          opStatePartitions = None)
-      val p8State = state()
-      val (_, rkp8Sec, rkp8Matched, _, rkp8Dur) =
-        intervalJoinScenario(spark, rows, acc = acc,
-          provider = Some(RocksDbProvider), statefulPartitions = Some(8),
-          opStatePartitions = None)
-      val rkp8State = state()
       // the first-class knob, closed-loop: width derived from the DEFAULT
       // run's measured peak state via the documented heuristic, applied
       // through the OPERATOR parameter (not session conf) — this line
       // within ~15% of the hand-tuned p8 number is the evidence that a
       // deployment following the Scaladoc recipe lands on the tuned
       // configuration without touching session conf
-      val autoWidth = graft.streaming.EventTime.statePartitionsForVolume(
-        math.max(0L, ijState._2))
-      val (_, autoSec, autoMatched, _, autoDur) =
-        intervalJoinScenario(spark, rows, acc = acc, opStatePartitions = Some(autoWidth))
-      val autoState = state()
+      val autoWidth = graft.streaming.EventTime.statePartitionsForVolume(math.max(0L, ijP.stateMemMax))
+      val (_, autoSec, autoMatched, _, autoP) =
+        intervalJoinScenario(spark, rows, opStatePartitions = Some(autoWidth))
       // bounded as-of (the three-stateful-op composition: time-bound join →
       // watermark-finalized max_by), folded into the default block so the
       // numbers the NOTES gate cites live in COMMITTED artifacts (r13
@@ -620,39 +512,32 @@ object Bench {
       // driver never sets). Same default / hand-tuned p8 / closed-loop
       // auto triangle as interval_join.
       asofBoundedScenario(spark, math.min(rows / 10, 20000)) // untimed: agg-state codegen
-      val (abRows, abSec, abEmitted, abBatches, abDur) = asofBoundedScenario(spark, rows, acc = acc)
-      val abState = state()
-      val (_, abp8Sec, abp8Emitted, _, abp8Dur) =
-        asofBoundedScenario(spark, rows, acc = acc, statefulPartitions = Some(8),
-          opStatePartitions = None)
-      val abp8State = state()
-      val abAutoWidth = graft.streaming.EventTime.statePartitionsForVolume(
-        math.max(0L, abState._2))
-      val (_, abAutoSec, abAutoEmitted, _, abAutoDur) =
-        asofBoundedScenario(spark, rows, acc = acc, opStatePartitions = Some(abAutoWidth))
-      val abAutoState = state()
-      def durJson(d: Map[String, Long]) =
-        d.toSeq.sortBy(-_._2).map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
-      def block(r: Long, sec: Double, proc: Long, batches: Long, d: Map[String, Long]) =
-        s"""{"sec":${math.round(sec * 1000) / 1000.0},"rows_per_sec":${math.round(r / sec)},"processed":$proc,"micro_batches":$batches,"durations_ms":${durJson(d)}}"""
-      def ijBlock(sec: Double, m: Long, d: Map[String, Long], st: (Long, Long)) =
-        s"""{"sec":${math.round(sec * 1000) / 1000.0},"rows_per_sec":${math.round(ijRows / sec)},"matched":$m,"state_rows_max":${st._1},"state_mem_mb":${st._2 / (1 << 20)},"durations_ms":${durJson(d)}}"""
-      def abBlock(sec: Double, e: Long, d: Map[String, Long], st: (Long, Long)) =
-        s"""{"sec":${math.round(sec * 1000) / 1000.0},"rows_per_sec":${math.round(abRows / sec)},"emitted":$e,"state_rows_max":${st._1},"state_mem_mb":${st._2 / (1 << 20)},"durations_ms":${durJson(d)}}"""
+      val (abRows, abSec, abEmitted, abBatches, abP) = asofBoundedScenario(spark, rows)
+      val (_, abp8Sec, abp8Emitted, _, abp8P) =
+        asofBoundedScenario(spark, rows, statefulPartitions = Some(8), opStatePartitions = None)
+      val abAutoWidth = graft.streaming.EventTime.statePartitionsForVolume(math.max(0L, abP.stateMemMax))
+      val (_, abAutoSec, abAutoEmitted, _, abAutoP) =
+        asofBoundedScenario(spark, rows, opStatePartitions = Some(abAutoWidth))
+      def block(r: Long, sec: Double, proc: Long, batches: Long, p: ProgressSnapshot) =
+        s"""{"sec":${math.round(sec * 1000) / 1000.0},"rows_per_sec":${math.round(r / sec)},"processed":$proc,"micro_batches":$batches,"durations_ms":${durJson(p)}}"""
+      def ijBlock(sec: Double, m: Long, p: ProgressSnapshot) =
+        s"""{"sec":${math.round(sec * 1000) / 1000.0},"rows_per_sec":${math.round(ijRows / sec)},"matched":$m,"state_rows_max":${p.stateRowsMax},"state_mem_mb":${p.stateMemMax / (1 << 20)},"durations_ms":${durJson(p)}}"""
+      def abBlock(sec: Double, e: Long, p: ProgressSnapshot) =
+        s"""{"sec":${math.round(sec * 1000) / 1000.0},"rows_per_sec":${math.round(abRows / sec)},"emitted":$e,"state_rows_max":${p.stateRowsMax},"state_mem_mb":${p.stateMemMax / (1 << 20)},"durations_ms":${durJson(p)}}"""
       s"""{"rows":$bRows,"state_provider":"${blockProvider.map(_.split('.').last).getOrElse("HDFSBackedStateStoreProvider")}","calibration_sec":${math.round(streamCalibrationSec * 1000) / 1000.0},""" +
-        s""""burst":${block(bRows, bSec, bProc, bBatches, bDur)},""" +
-        s""""sustained":${block(sRows, sSec, sProc, sBatches, sDur)},""" +
-        s""""single_group":${block(mRows, mSec, mProc, mBatches, mDur)},""" +
-        s""""rate_limited":${block(rRows, rSec, rProc, rBatches, rDur)},""" +
-        s""""drain":{"drain_sec":${math.round(dSec * 1000) / 1000.0},"rows_per_sec":${math.round(dRows / dSec)},"processed":$dProc,"durations_ms":${durJson(dDur)}},""" +
-        s""""interval_join":${ijBlock(ijSec, ijMatched, ijDur, ijState).dropRight(1)},"micro_batches":$ijBatches},""" +
-        s""""interval_join_rocksdb":${ijBlock(rkSec, rkMatched, rkDur, rkState)},""" +
-        s""""interval_join_p8":${ijBlock(p8Sec, p8Matched, p8Dur, p8State)},""" +
-        s""""interval_join_rocksdb_p8":${ijBlock(rkp8Sec, rkp8Matched, rkp8Dur, rkp8State)},""" +
-        s""""interval_join_auto":${ijBlock(autoSec, autoMatched, autoDur, autoState).dropRight(1)},"width":$autoWidth},""" +
-        s""""asof_bounded":${abBlock(abSec, abEmitted, abDur, abState).dropRight(1)},"micro_batches":$abBatches},""" +
-        s""""asof_bounded_p8":${abBlock(abp8Sec, abp8Emitted, abp8Dur, abp8State)},""" +
-        s""""asof_bounded_auto":${abBlock(abAutoSec, abAutoEmitted, abAutoDur, abAutoState).dropRight(1)},"width":$abAutoWidth}}"""
+        s""""burst":${block(bRows, bSec, bProc, bBatches, bP)},""" +
+        s""""sustained":${block(sRows, sSec, sProc, sBatches, sP)},""" +
+        s""""single_group":${block(mRows, mSec, mProc, mBatches, mP)},""" +
+        s""""rate_limited":${block(rRows, rSec, rProc, rBatches, rP)},""" +
+        s""""drain":{"drain_sec":${math.round(dSec * 1000) / 1000.0},"rows_per_sec":${math.round(dRows / dSec)},"processed":$dProc,"durations_ms":${durJson(dP)}},""" +
+        s""""interval_join":${ijBlock(ijSec, ijMatched, ijP).dropRight(1)},"micro_batches":$ijBatches},""" +
+        s""""interval_join_rocksdb":${ijBlock(rkSec, rkMatched, rkP)},""" +
+        s""""interval_join_p8":${ijBlock(p8Sec, p8Matched, p8P)},""" +
+        s""""interval_join_rocksdb_p8":${ijBlock(rkp8Sec, rkp8Matched, rkp8P)},""" +
+        s""""interval_join_auto":${ijBlock(autoSec, autoMatched, autoP).dropRight(1)},"width":$autoWidth},""" +
+        s""""asof_bounded":${abBlock(abSec, abEmitted, abP).dropRight(1)},"micro_batches":$abBatches},""" +
+        s""""asof_bounded_p8":${abBlock(abp8Sec, abp8Emitted, abp8P)},""" +
+        s""""asof_bounded_auto":${abBlock(abAutoSec, abAutoEmitted, abAutoP).dropRight(1)},"width":$abAutoWidth}}"""
     }
   }
 
@@ -713,7 +598,7 @@ object Bench {
       // plus shared builds REBUILT per query (Caches.invalidate between
       // queries — identical generated source each time), a 100-entry LRU
       // recompiles the same Janino classes all suite long. Measured on the
-      // 12-query shared-build mini-suite (Prof minisuite): pass-1 wall
+      // 12-query shared-build mini-suite: pass-1 wall
       // 85.6 s → 49.1 s and Janino 19.0 s → 7.8 s; warm pass Janino
       // 5.4 s → 0.27 s. Not a local[32] artifact: any long-lived session
       // running a broad operator library hits the same eviction churn.
@@ -1215,13 +1100,15 @@ object Bench {
     // recorded parsed:null since r14 — sbt prefixes every stdout line with
     // "[info] ", so the one-line JSON never parsed driver-side. The EXACT
     // same line is therefore also written verbatim to BENCH_LINE.json in
-    // the working directory (repo root under the driver's invocation), a
-    // clean machine-consumable copy with no log framing. Full-registry
-    // runs only, mirroring BENCH_DETAIL.json ownership — a filtered
-    // profiling run must never clobber the driver-facing artifact.
+    // the working directory, a clean machine-consumable copy with no log
+    // framing, and its absolute path goes to stderr. Full-registry runs
+    // only, mirroring BENCH_DETAIL.json ownership — a filtered profiling
+    // run must never clobber the committed artifact.
     if (only.isEmpty) {
-      val lw = new java.io.PrintWriter("BENCH_LINE.json", "UTF-8")
+      val linePath = new java.io.File("BENCH_LINE.json").getAbsolutePath
+      val lw = new java.io.PrintWriter(linePath, "UTF-8")
       try lw.println(stdoutLine) finally lw.close()
+      System.err.println(s"[bench-line] $linePath")
     }
     println(stdoutLine)
     spark.stop()

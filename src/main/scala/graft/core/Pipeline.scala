@@ -7,7 +7,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.ack.Acknowledger
 import graft.config.{BatcherConfig, PipelineConfig}
 import graft.model.{BatchInfo, Message, MessageStatus}
-import graft.runtime.{LocalCheckpointFileManager, PipelineRegistry, StageCounters, StageMetrics}
+import graft.runtime.{LocalCheckpointFileManager, PipelineRegistry, ProgressSnapshot, ProgressTotals, StageCounters, StageMetrics}
 import graft.streaming.KeyedBatcher
 
 /** The pipeline engine: Broadway's producer → processor → batcher →
@@ -303,6 +303,8 @@ object Pipeline {
   /** Start a streaming pipeline over a source of already-wrapped messages.
     * The analog of `Broadway.start_link/2` (broadway.ex:1123-1162):
     * validates config, assembles the lineage, registers the running query.
+    * The returned handle owns the pipeline's metrics: its stage counters
+    * and a [[graft.runtime.ProgressTotals]] on the query's session.
     */
   def start[A](
       spark: SparkSession,
@@ -318,6 +320,7 @@ object Pipeline {
     config.prepareForStart()
     useLocalCheckpointLogs(spark)
     val counters = StageCounters.create(spark.sparkContext, config.name, config.batchers.map(_.name))
+    val totals = ProgressTotals.on(source.sparkSession)
     def build(): StreamingQuery = {
       val writer = source.writeStream
         .queryName(config.name)
@@ -327,6 +330,7 @@ object Pipeline {
           processBatch(df, config, acknowledger, Some(counters))
         }
       config.checkpointLocation.foreach(writer.option("checkpointLocation", _))
+      totals.expectRun(config.name)
       writer.start()
     }
     // Source descriptors — the producer_names/1 analog (broadway.ex:
@@ -334,7 +338,14 @@ object Pipeline {
     val producers = source.queryExecution.logical
       .collectLeaves()
       .map(l => l.toString.linesIterator.next().take(120))
-    val running = new RunningPipeline[A](config, build(), rateLimiter, producers)
+    val firstRun =
+      try build()
+      catch {
+        case NonFatal(e) =>
+          totals.close()
+          throw e
+      }
+    val running = new RunningPipeline[A](config, firstRun, rateLimiter, counters, totals, producers)
     config.restartPolicy.foreach(p => graft.runtime.Supervisor.supervise(spark, running, p, () => build()))
     // Registration can throw with a pluggable backend (name validation,
     // descriptor I/O). At this point the query is already started and
@@ -393,6 +404,8 @@ final class RunningPipeline[A](
     val config: PipelineConfig[A],
     initialQuery: StreamingQuery,
     val rateLimiter: Option[RateLimiter],
+    counters: StageCounters,
+    private[graft] val progressTotals: ProgressTotals,
     /** Source descriptors (the producer_names/1 analog). */
     val producerNames: Seq[String] = Seq.empty
 ) {
@@ -445,7 +458,7 @@ final class RunningPipeline[A](
       // On a query that already crashed, processAllAvailable/awaitTermination
       // rethrow its StreamingQueryException — runtime resources must still be
       // released (else every crashed pipeline leaks its registry entry and
-      // counters), so the releases get their own finally.
+      // progress listener), so the releases get their own finally.
       try {
         if (graceful) {
           q.stop()
@@ -459,17 +472,18 @@ final class RunningPipeline[A](
           killer.start()
           killer.join(math.max(timeoutMs, 1L))
         }
-      } finally {
-        rateLimiter.foreach(_.shutdown())
-        // post-mortem metrics: snapshot BEFORE the counters leave the
-        // registry, so callers can still read the final stage totals of a
-        // stopped pipeline (e.g. the drain scenario proving every pushed
-        // row processed) — the reference's telemetry outlives the stages
-        finalMetrics = StageCounters.metricsOf(name)
-        StageCounters.remove(name)
-        PipelineRegistry.unregister(name)
-      }
+      } finally release()
     }
+  }
+
+  /** Release the runtime resources: the rate limiter, the progress
+    * listener (once the last run's events are in) and the registry entry.
+    * Run by `stop()` and by a Supervisor that gives up.
+    */
+  private[graft] def release(): Unit = {
+    rateLimiter.foreach(_.shutdown())
+    progressTotals.close()
+    PipelineRegistry.unregister(name)
   }
 
   def topology: TopologyInfo =
@@ -479,13 +493,16 @@ final class RunningPipeline[A](
       batchers = config.batchers.map(b => BatcherInfo(b.name, b.batchSize, b.batchTimeoutMs, b.concurrency))
     )
 
-  @volatile private var finalMetrics: Option[StageMetrics] = None
-
-  /** Per-stage counter snapshot (the telemetry-span analog); after stop(),
-    * the final snapshot taken at teardown.
+  /** This pipeline's per-stage counters (the telemetry-span analog),
+    * read from its own accumulators, so after stop() they are the final
+    * totals. Always `Some`.
     */
-  def stageMetrics: Option[StageMetrics] =
-    StageCounters.metricsOf(name).orElse(finalMetrics)
+  def stageMetrics: Option[StageMetrics] = Some(counters.snapshot)
+
+  /** This pipeline's micro-batch progress totals over every run and batch;
+    * read after stop(), they include the last batch.
+    */
+  def progress: ProgressSnapshot = progressTotals.snapshot
 
   def getRateLimiting: Option[graft.config.RateLimiting] = rateLimiter.map(_.get)
 

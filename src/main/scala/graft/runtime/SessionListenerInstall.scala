@@ -13,9 +13,10 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   * pair is synchronized — two threads installing into the same fresh
   * session must not double-attach.
   *
-  * Shared by [[Telemetry]] and [[Supervisor]] (which had hand-maintained
-  * copies of this exact logic, with a synchronization divergence between
-  * them — the reason it is now one helper).
+  * Serves [[Supervisor]], whose one listener watches every supervised
+  * query of a session. Per-pipeline listeners ([[ProgressTotals]]) need
+  * no such guard: each is added once, to its own query's session, and
+  * removes itself when its query is done.
   */
 private[runtime] final class SessionListenerInstall(listener: StreamingQueryListener) {
   private val installedSessions: java.util.Set[SparkSession] =

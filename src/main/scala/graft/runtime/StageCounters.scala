@@ -81,15 +81,15 @@ final case class StageMetrics(
 )
 
 object StageCounters {
-  private val registry = new java.util.concurrent.ConcurrentHashMap[String, StageCounters]()
 
-  /** Create + register counters for a pipeline (called by Pipeline.start).
-    * Accumulators are built here so the counters object itself holds no
-    * SparkContext and serializes cleanly into executor closures.
+  /** Create a pipeline's counters (called by Pipeline.start; its
+    * RunningPipeline owns them). Accumulators are built here so the
+    * counters object itself holds no SparkContext and serializes cleanly
+    * into executor closures.
     */
   def create(sc: SparkContext, pipelineName: String, batcherNames: Seq[String]): StageCounters = {
     def acc(suffix: String): LongAccumulator = sc.longAccumulator(s"graft.$pipelineName.$suffix")
-    val c = new StageCounters(
+    new StageCounters(
       processorProcessed = acc("processor.processed"),
       processorFailed = acc("processor.failed"),
       processorNanos = acc("processor.nanos"),
@@ -102,13 +102,5 @@ object StageCounters {
       ackSuccessful = acc("ack.successful"),
       ackFailed = acc("ack.failed")
     )
-    registry.put(pipelineName, c)
-    c
   }
-
-  /** Snapshot for a pipeline name; zeros if none registered. */
-  def metricsOf(pipelineName: String): Option[StageMetrics] =
-    Option(registry.get(pipelineName)).map(_.snapshot)
-
-  def remove(pipelineName: String): Unit = { registry.remove(pipelineName); () }
 }

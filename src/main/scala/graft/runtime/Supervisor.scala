@@ -130,9 +130,7 @@ object Supervisor {
     */
   private def giveUp(st: State): Unit = {
     gaveUpSet.add(st.pipelineName)
-    st.running.rateLimiter.foreach(_.shutdown())
-    StageCounters.remove(st.pipelineName)
-    PipelineRegistry.unregister(st.pipelineName)
+    st.running.release()
   }
 
   /** Put a running pipeline under supervision. Idempotently installs the

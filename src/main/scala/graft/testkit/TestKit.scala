@@ -35,8 +35,6 @@ final class TestPipeline[A](
   private val limiter: Option[RateLimiter] =
     config.rateLimiting.map(r => new RateLimiter(r.allowedMessages, r.intervalMs))
 
-  graft.runtime.Telemetry.install(spark)
-
   val running: RunningPipeline[A] =
     Pipeline.start(
       spark,

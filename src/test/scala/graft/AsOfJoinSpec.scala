@@ -181,7 +181,7 @@ class AsOfJoinSpec extends SparkSpec {
   }
 
   test("bucketed sides join with NO exchange — the pre-partitioned layout pays zero shuffle") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_asof_bkt").toString
+    val tmp = tempDir("graft_asof_bkt").toString
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {

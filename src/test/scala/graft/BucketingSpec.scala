@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.ops.{Bucketing, Tables}
 
@@ -14,7 +13,7 @@ class BucketingSpec extends SparkSpec {
   private val sfDir = "/root/testdata/sf0.001"
 
   test("joins on co-bucketed tables have no exchange and no per-query sort") {
-    val tmp = Files.createTempDirectory("graft-bucketed").toFile.getAbsolutePath
+    val tmp = tempDir("graft-bucketed").toFile.getAbsolutePath
     val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     // force the sort-merge path: broadcast would hide the exchange question
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -61,7 +60,7 @@ class BucketingSpec extends SparkSpec {
   }
 
   test("partitioned layout prunes non-matching partitions at planning time") {
-    val dir = Files.createTempDirectory("graft_part").toString
+    val dir = tempDir("graft_part").toString
     val docs = Tables.documents(spark, sfDir).select("doc_id", "source", "n_chars")
     Bucketing.writePartitioned(docs, "source", dir)
     val read = spark.read.parquet(dir).filter(col("source") === "src3")
@@ -91,7 +90,7 @@ class BucketingSpec extends SparkSpec {
   }
 
   test("partitioned layout: hotValueSalt spreads a value across writers, bounded by the salt") {
-    val dir = Files.createTempDirectory("graft_part_salt").toString
+    val dir = tempDir("graft_part_salt").toString
     val docs = Tables.documents(spark, sfDir).select("doc_id", "source", "n_chars")
     // ADVERSARIAL input layout: pre-clustered by the partition column —
     // exactly the shape of a frame read back from a previous partitionBy
@@ -125,7 +124,7 @@ class BucketingSpec extends SparkSpec {
       .withColumn("attrs", org.apache.spark.sql.functions.map(
         org.apache.spark.sql.functions.lit("k"), org.apache.spark.sql.functions.col("v")))
       .withColumnRenamed("v", "user.id")
-    val dir2 = Files.createTempDirectory("graft_part_salt2").toString
+    val dir2 = tempDir("graft_part_salt2").toString
     Bucketing.writePartitioned(awkward, "src", dir2, hotValueSalt = 2)
     assert(spark.read.parquet(dir2).count() == 3)
   }
@@ -142,8 +141,8 @@ class BucketingSpec extends SparkSpec {
     }
     val docs = Tables.documents(spark, "/root/testdata/sf0.1").select("doc_id", "source", "text")
     val total = docs.count()
-    val sortedDir = Files.createTempDirectory("graft_sorted").toString
-    val shuffledDir = Files.createTempDirectory("graft_shuffled").toString
+    val sortedDir = tempDir("graft_sorted").toString
+    val shuffledDir = tempDir("graft_shuffled").toString
     // tiny row groups so skipping granularity exists at test scale
     Bucketing.writeSorted(docs, "doc_id", sortedDir, rowGroupBytes = 64L << 10)
     // control: SAME rows, scattered layout (hash-clustered on source, so
@@ -191,8 +190,8 @@ class BucketingSpec extends SparkSpec {
     val total = li.count()
     val Array(maxOrd, maxPart) =
       li.agg(max("l_orderkey"), max("l_partkey")).head().toSeq.map(_.toString.toLong).toArray
-    val zDir = Files.createTempDirectory("graft_zorder").toString
-    val aDir = Files.createTempDirectory("graft_asort").toString
+    val zDir = tempDir("graft_zorder").toString
+    val aDir = tempDir("graft_asort").toString
     Bucketing.writeZOrder(li, "l_orderkey", "l_partkey", zDir, rowGroupBytes = 64L << 10)
     // control: one-dimensional sort on l_orderkey only
     Bucketing.writeSorted(li, "l_orderkey", aDir, rowGroupBytes = 64L << 10)

@@ -33,7 +33,7 @@ class ConfigStorageSpec extends SparkSpec {
   }
 
   test("file-backed backend CRUD + on-disk descriptor") {
-    val dir = Files.createTempDirectory("graft-cfg")
+    val dir = tempDir("graft-cfg")
     val storage = new FileBackedConfigStorage(dir)
     crud(storage, "cfg-file")
     // the descriptor round-trip: put writes <name>.json readable by a
@@ -52,7 +52,7 @@ class ConfigStorageSpec extends SparkSpec {
   }
 
   test("unsafe pipeline names are rejected by the file backend") {
-    val dir = Files.createTempDirectory("graft-cfg-unsafe")
+    val dir = tempDir("graft-cfg-unsafe")
     val storage = new FileBackedConfigStorage(dir)
     val tp = new TestPipeline(spark, PipelineConfig[Int](name = "ok-name"))
     try {
@@ -64,7 +64,7 @@ class ConfigStorageSpec extends SparkSpec {
   }
 
   test("PipelineRegistry delegates to the configured backend") {
-    val dir = Files.createTempDirectory("graft-cfg-reg")
+    val dir = tempDir("graft-cfg-reg")
     val fileStorage = new FileBackedConfigStorage(dir)
     graft.runtime.PipelineRegistry.configureStorage(fileStorage)
     try {

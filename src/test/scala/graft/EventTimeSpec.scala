@@ -635,7 +635,7 @@ class EventTimeSpec extends SparkSpec {
     // one) keeps the original width, because Spark pins it in the offset
     // log at first start.
     implicit val sql: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val checkpoint = java.nio.file.Files.createTempDirectory("graft-sp-ckpt").toString
+    val checkpoint = tempDir("graft-sp-ckpt").toString
     val cs = MemoryStream[(Long, Timestamp)]
     val bs = MemoryStream[(Long, Timestamp, Double)]
     def joined(width: Option[Int]) = EventTime.intervalJoin(
@@ -694,7 +694,7 @@ class EventTimeSpec extends SparkSpec {
     // buffered, every other key 2), stop the query, then read its state
     // through Spark's state data source.
     implicit val sql: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val checkpoint = java.nio.file.Files.createTempDirectory("graft-inspect").toString
+    val checkpoint = tempDir("graft-inspect").toString
     val cs = MemoryStream[(Long, Timestamp)]
     val bs = MemoryStream[(Long, Timestamp, Double)]
     val joined = EventTime.intervalJoin(
@@ -737,7 +737,7 @@ class EventTimeSpec extends SparkSpec {
     // RocksDB deployment (state beyond heap) gets the same hot-key
     // answer from its checkpoint files
     implicit val sql: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val checkpoint = java.nio.file.Files.createTempDirectory("graft-inspect-rdb").toString
+    val checkpoint = tempDir("graft-inspect-rdb").toString
     val cs = MemoryStream[(Long, Timestamp)]
     val bs = MemoryStream[(Long, Timestamp, Double)]
     val bound = EventTime.withStatePartitions(
@@ -774,7 +774,7 @@ class EventTimeSpec extends SparkSpec {
     // the one about to abort the memory budget. The bytes estimate ranks
     // it first; rankBy = "rows" remains available for the row view.
     implicit val sql: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val checkpoint = java.nio.file.Files.createTempDirectory("graft-inspect-bytes").toString
+    val checkpoint = tempDir("graft-inspect-bytes").toString
     val ms = MemoryStream[(String, String)]
     val agg = ms.toDF().toDF("k", "payload")
       .groupBy("k")
@@ -927,7 +927,7 @@ class EventTimeSpec extends SparkSpec {
     // relies on.
     RestartProbe.clear()
     val (streamed, expected) = chainedPipelineDifferential(77) { (cs, bs, joined, cW, bW) =>
-      val ckpt = java.nio.file.Files.createTempDirectory("graft-restart-ckpt").toString
+      val ckpt = tempDir("graft-restart-ckpt").toString
       def start() = joined().writeStream
         .outputMode("append")
         .option("checkpointLocation", ckpt)

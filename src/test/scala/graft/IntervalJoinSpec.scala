@@ -171,7 +171,7 @@ class IntervalJoinSpec extends SparkSpec {
   }
 
   test("bucketed sides join with NO exchange") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ival_bkt").toString
+    val tmp = tempDir("graft_ival_bkt").toString
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {

@@ -165,7 +165,7 @@ class KeyedBatcherSpec extends SparkSpec {
   test("open-batch state survives a query restart via checkpoint") {
     EmitProbe.clear()
     implicit val sql: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val checkpoint = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
+    val checkpoint = tempDir("graft-ckpt").toString
     val stream = MemoryStream[Message[Int]]
 
     def startQuery() = KeyedBatcher(stream.toDS(), batchSize = 10, batchTimeoutMs = 600000).writeStream
@@ -278,7 +278,7 @@ class KeyedBatcherSpec extends SparkSpec {
     // serialVersionUID mismatch ("keep A binary-stable or drain").
     EmitProbeS.clear()
     implicit val sql: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val checkpoint = java.nio.file.Files.createTempDirectory("graft-evolve").toString
+    val checkpoint = tempDir("graft-evolve").toString
 
     val s1 = MemoryStream[Message[PayV1]]
     val batches1 = KeyedBatcher.incremental(s1.toDS(), batchSize = 10, batchTimeoutMs = 600000)
@@ -423,7 +423,7 @@ class KeyedBatcherSpec extends SparkSpec {
     // checkpoint must drain the buffer intact on timeout.
     EmitProbeS.clear()
     implicit val sql: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val checkpoint = java.nio.file.Files.createTempDirectory("graft-inc-inspect").toString
+    val checkpoint = tempDir("graft-inc-inspect").toString
     val s1 = MemoryStream[Message[PayV1]]
     val q1 = KeyedBatcher.incremental(s1.toDS(), batchSize = 100, batchTimeoutMs = 600000)
       .writeStream
@@ -546,8 +546,8 @@ class KeyedBatcherSpec extends SparkSpec {
     def estSum(checkpoint: String): Long = graft.streaming.StateInspect
       .hotKeys(spark, checkpoint, topK = 10)
       .agg(org.apache.spark.sql.functions.sum("state_bytes_est")).head().getLong(0)
-    val ckNarrow = java.nio.file.Files.createTempDirectory("graft-bytes-narrow").toString
-    val ckWide = java.nio.file.Files.createTempDirectory("graft-bytes-wide").toString
+    val ckNarrow = tempDir("graft-bytes-narrow").toString
+    val ckWide = tempDir("graft-bytes-wide").toString
     run(ckNarrow, wideA = false)
     run(ckWide, wideA = true)
     // ranking: the wide key tops the bytes ranking, not just the row count

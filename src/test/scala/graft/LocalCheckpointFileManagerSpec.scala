@@ -7,7 +7,6 @@ import scala.jdk.CollectionConverters._
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileAlreadyExistsException, Path, RawLocalFileSystem}
 import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager, FileContextBasedCheckpointFileManager, FileSystemBasedCheckpointFileManager}
-import org.scalatest.funsuite.AnyFunSuite
 import graft.runtime.LocalCheckpointFileManager
 
 /** The local disk under a `fake:` scheme that has no `FileContext`
@@ -21,17 +20,13 @@ class FakeSchemeFileSystem extends RawLocalFileSystem {
 /** `LocalCheckpointFileManager`: java.nio atomic writes on `file:` paths,
   * Spark's default manager for everything else.
   */
-class LocalCheckpointFileManagerSpec extends AnyFunSuite {
+class LocalCheckpointFileManagerSpec extends SparkSpec {
 
   private val conf = new Configuration()
   conf.set("fs.fake.impl", classOf[FakeSchemeFileSystem].getName)
   conf.setBoolean("fs.fake.impl.disable.cache", true)
 
-  private def withDir(f: NioPath => Unit): Unit = {
-    val dir = Files.createTempDirectory("graft-ckpt-fm")
-    try f(dir)
-    finally Files.walk(dir).iterator.asScala.toSeq.reverse.foreach(Files.deleteIfExists)
-  }
+  private def withDir(f: NioPath => Unit): Unit = f(tempDir("graft-ckpt-fm"))
 
   private def hpath(p: NioPath): Path = new Path(p.toUri)
 

@@ -121,7 +121,7 @@ class PipelineSpec extends SparkSpec {
   private def checkpointHandover(tag: String, first: Option[String], second: Option[String]): Unit = {
     val queue = s"handover-$tag"
     val collectorId = s"handover-acks-$tag"
-    val ckpt = Files.createTempDirectory("graft-ckpt-handover")
+    val ckpt = tempDir("graft-ckpt-handover")
     val v = (1 to 20).map(i => s"m$i")
     QueueSource.create(queue, None)
     try {
@@ -145,7 +145,6 @@ class PipelineSpec extends SparkSpec {
     } finally {
       QueueSource.remove(queue)
       AckCollector.clear(collectorId)
-      Files.walk(ckpt).iterator.asScala.toSeq.reverse.foreach(Files.deleteIfExists)
     }
   }
 
@@ -274,23 +273,51 @@ class PipelineSpec extends SparkSpec {
     } finally tp.stop()
   }
 
-  // Telemetry.install is per-SESSION: a second SparkSession's pipelines
-  // must report metrics too (a global install flag would bind only the
-  // first session's listener bus and silently zero the second).
-  test("telemetry binds every session, not just the first") {
+  // A pipeline's metrics live on its own RunningPipeline, not in a
+  // JVM-wide map keyed by name: two same-named pipelines in two sessions
+  // each report their own counters and progress, and one stopping leaves
+  // the other's live counters alone.
+  test("metrics belong to each pipeline: same-named pipelines in two sessions stay apart") {
     val spark2 = spark.newSession()
-    val tp1 = new TestPipeline(spark, simpleConfig("tele-s1"))
-    val tp2 = new TestPipeline(spark2, simpleConfig("tele-s2"))
+    val tp1 = new TestPipeline(spark, simpleConfig("same-name"))
+    val tp2 = new TestPipeline(spark2, simpleConfig("same-name"))
+    def processed(tp: TestPipeline[Int]) = tp.running.stageMetrics.map(_.processorProcessed)
     try {
       tp1.testBatch(1 to 3)
       tp2.testBatch(1 to 4)
       tp1.processAllAvailable()
       tp2.processAllAvailable()
-      val m1 = graft.runtime.Telemetry.of("tele-s1")
-      val m2 = graft.runtime.Telemetry.of("tele-s2")
-      assert(m1.batches > 0 && m1.inputRows == 3, s"first session metrics: $m1")
-      assert(m2.batches > 0 && m2.inputRows == 4, s"second session metrics (install skipped?): $m2")
+      assert(processed(tp1).contains(3L) && processed(tp2).contains(4L),
+        s"processed: ${processed(tp1)} / ${processed(tp2)}")
+      tp2.stop()
+      assert(tp2.running.progress.inputRows == 4, s"second pipeline: ${tp2.running.progress}")
+      assert(processed(tp2).contains(4L))
+      assert(!listening(tp2.running, spark2), "progress listener left on the second session")
+      // the first pipeline is still live and still counts
+      assert(tp1.running.query.isActive && listening(tp1.running))
+      tp1.testBatch(4 to 5)
+      tp1.processAllAvailable()
+      assert(processed(tp1).contains(5L), s"first pipeline after the second stopped: ${processed(tp1)}")
     } finally { tp1.stop(); tp2.stop() }
+    assert(tp1.running.progress.inputRows == 5, s"first pipeline: ${tp1.running.progress}")
+    assert(!listening(tp1.running), "progress listener left on the first session")
+  }
+
+  // recentProgress is a ring of spark.sql.streaming.numRecentProgressUpdates
+  // entries; the progress totals see every batch.
+  test("progress totals count every batch past the recentProgress ring") {
+    val session = spark.newSession()
+    session.conf.set("spark.sql.streaming.numRecentProgressUpdates", "2")
+    val tp = new TestPipeline(session, simpleConfig("progress-ring"))
+    try (1 to 5).foreach { i =>
+      tp.testBatch(Seq(i))
+      tp.processAllAvailable()
+    } finally tp.stop()
+    assert(tp.running.query.recentProgress.length <= 2)
+    val p = tp.running.progress
+    assert(p.batches == 5 && p.inputRows == 5 && p.lastBatchId == 4, s"totals: $p")
+    assert(p.durationsMs.getOrElse("triggerExecution", 0L) > 0, s"phases: ${p.durationsMs}")
+    assert(!listening(tp.running, session), "progress listener leaked")
   }
 
   // broadway_test.exs:808-817 — crash in handle_message marks {kind, reason},
@@ -690,12 +717,14 @@ class PipelineSpec extends SparkSpec {
     tp2.running.stop(graft.core.StopReason.Normal, 10000L)
     assert(drained2.get(), "Normal must invoke prepare_for_draining")
     assert(!PipelineRegistry.allRunning.contains("stop-normal"))
-    // post-mortem metrics: the handle serves the final snapshot taken at
-    // teardown (the drain-latency bench proves its guarantee with this),
-    // while the LIVE counter registry is released
+    // post-mortem metrics: the handle's own counters and progress totals
+    // outlive the query (the drain-latency bench proves its guarantee with
+    // this), while the progress listener leaves the session
     assert(tp2.running.stageMetrics.map(_.processorProcessed).contains(1L),
-      s"expected final snapshot with 1 processed, got ${tp2.running.stageMetrics}")
-    assert(graft.runtime.StageCounters.metricsOf("stop-normal").isEmpty, "live counters leaked")
+      s"expected final totals with 1 processed, got ${tp2.running.stageMetrics}")
+    assert(tp2.running.progress.inputRows == 1, s"progress: ${tp2.running.progress}")
+    assert(!listening(tp2.running), "progress listener leaked after a clean stop")
+    assert(tp.running.progress.batches <= 1 && !listening(tp.running), "progress listener leaked after Kill")
     tp.clearAcks(); tp2.clearAcks()
   }
 

@@ -9,7 +9,7 @@ class SinksSpec extends SparkSpec {
   import spark.implicits._
 
   test("idempotentParquet makes a re-run of the same batch a no-op") {
-    val root = Files.createTempDirectory("graft-sink").toString
+    val root = tempDir("graft-sink").toString
     val df = (1 to 10).toDF("v")
     Sinks.idempotentParquet(df, root, batchId = 7)
     Sinks.idempotentParquet(df, root, batchId = 7) // retry of the same batch
@@ -18,7 +18,7 @@ class SinksSpec extends SparkSpec {
   }
 
   test("routedParquet fans out by batcher column") {
-    val root = Files.createTempDirectory("graft-routes").toString
+    val root = tempDir("graft-routes").toString
     val df = Seq((1, "a"), (2, "b"), (3, "a")).toDF("v", "batcher")
     Sinks.routedParquet(df, Seq("a", "b"), r => s"$root/$r", batchId = 0)
     assert(spark.read.parquet(s"$root/a/batch_id=0").count() == 2)
@@ -26,7 +26,7 @@ class SinksSpec extends SparkSpec {
   }
 
   test("routedManifested: per-route atomic publication, replay re-publishes only missing routes") {
-    val root = Files.createTempDirectory("graft-routes-m").toString
+    val root = tempDir("graft-routes-m").toString
     val df = Seq((1, "a"), (2, "b"), (3, "a")).toDF("v", "batcher")
     Sinks.routedManifested(df, Seq("a", "b"), r => s"$root/$r", batchId = 0)
     assert(Sinks.readManifested(spark, s"$root/a").count() == 2)
@@ -45,7 +45,7 @@ class SinksSpec extends SparkSpec {
   }
 
   test("manifestedParquet publishes atomically: unmanifested data is invisible, replay is a no-op") {
-    val root = Files.createTempDirectory("graft-manifest").toString
+    val root = tempDir("graft-manifest").toString
     // batch 0 published normally
     Sinks.manifestedParquet((1 to 5).toDF("v"), root, batchId = 0)
     assert(Sinks.readManifested(spark, root).count() == 5)
@@ -69,7 +69,7 @@ class SinksSpec extends SparkSpec {
   }
 
   test("readManifested on an empty root returns an empty frame; with a schema it is selectable") {
-    val root = Files.createTempDirectory("graft-manifest-empty").toString
+    val root = tempDir("graft-manifest-empty").toString
     assert(Sinks.readManifested(spark, root).count() == 0)
     // a reader starting before the first publish must be able to reference
     // its columns, not die on the column-less emptyDataFrame
@@ -81,7 +81,7 @@ class SinksSpec extends SparkSpec {
   }
 
   test("vacuumUnmanifested reclaims only unreferenced staging dirs") {
-    val root = Files.createTempDirectory("graft-manifest-vac").toString
+    val root = tempDir("graft-manifest-vac").toString
     Sinks.manifestedParquet((1 to 3).toDF("v"), root, batchId = 0)
     // a crashed attempt: staging data with no manifest
     (7 to 9).toDF("v").write.parquet(s"$root/data/batch-1-deadbeef")
@@ -94,7 +94,7 @@ class SinksSpec extends SparkSpec {
   }
 
   test("manifestedParquet works as a real streaming foreachBatch sink") {
-    val root = Files.createTempDirectory("graft-manifest-stream").toString
+    val root = tempDir("graft-manifest-stream").toString
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val stream = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Int]
     val q = stream
@@ -118,7 +118,7 @@ class SinksSpec extends SparkSpec {
   }
 
   test("compactParquet collapses a many-tiny-file directory, preserving the data") {
-    val dir = Files.createTempDirectory("graft-compact").toString + "/data"
+    val dir = tempDir("graft-compact").toString + "/data"
     // simulate many trigger-sized writes: 64 partitions → 64 tiny files
     spark.range(10000).repartition(64).write.parquet(dir)
     def files = new java.io.File(dir).listFiles().count(_.getName.endsWith(".parquet"))
@@ -140,7 +140,7 @@ class SinksSpec extends SparkSpec {
     // contradicting the Scaladoc's crash-safety claim (self-review r12).
     // The two-rename swap's windows are each simulated here and the next
     // compactParquet call must heal them before compacting.
-    val root = Files.createTempDirectory("graft-compact-crash").toString
+    val root = tempDir("graft-compact-crash").toString
     val dir = root + "/data"
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(dir), spark.sparkContext.hadoopConfiguration)
@@ -166,7 +166,7 @@ class SinksSpec extends SparkSpec {
   }
 
   test("compactManifested: one atomic superseding manifest, data preserved, old batches reclaimed") {
-    val root = Files.createTempDirectory("graft-mcompact").toString
+    val root = tempDir("graft-mcompact").toString
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(root), spark.sparkContext.hadoopConfiguration)
     def p(s: String) = new org.apache.hadoop.fs.Path(s)
@@ -201,7 +201,7 @@ class SinksSpec extends SparkSpec {
   }
 
   test("compactManifested window + leftovers: superseded manifests on disk are ignored, never resurrected") {
-    val root = Files.createTempDirectory("graft-mcompact-win").toString
+    val root = tempDir("graft-mcompact-win").toString
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(root), spark.sparkContext.hadoopConfiguration)
     def p(s: String) = new org.apache.hadoop.fs.Path(s)
@@ -266,7 +266,7 @@ class SinksSpec extends SparkSpec {
     // everything derives from one listing; this interleaves a publish AND
     // an in-flight (manifest-less) write into the exact window and
     // asserts both survive.
-    val root = Files.createTempDirectory("graft-mcompact-race").toString
+    val root = tempDir("graft-mcompact-race").toString
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(root), spark.sparkContext.hadoopConfiguration)
     def p(s: String) = new org.apache.hadoop.fs.Path(s)
@@ -304,7 +304,7 @@ class SinksSpec extends SparkSpec {
     // main thread compacts in a housekeeping loop ("call it blindly").
     // No timing assertions — only end-state integrity: every batch's sum
     // present exactly once, readable mid-run and after.
-    val root = Files.createTempDirectory("graft-mcompact-conc").toString
+    val root = tempDir("graft-mcompact-conc").toString
     def total() = Sinks.readManifested(spark, root)
       .agg(org.apache.spark.sql.functions.sum("v")).head().getLong(0)
     val batches = 24
@@ -346,7 +346,7 @@ class SinksSpec extends SparkSpec {
   }
 
   test("compactManifested retention: retired state outlives the publish by retainMillis for lazy readers") {
-    val root = Files.createTempDirectory("graft-mcompact-retain").toString
+    val root = tempDir("graft-mcompact-retain").toString
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(root), spark.sparkContext.hadoopConfiguration)
     def p(s: String) = new org.apache.hadoop.fs.Path(s)
@@ -383,7 +383,7 @@ class SinksSpec extends SparkSpec {
     // the grace window of the freshly retired compaction manifest naming
     // the same dir — the reader the window protects resolved the
     // compaction manifest's list.
-    val root = Files.createTempDirectory("graft-mcompact-shared").toString
+    val root = tempDir("graft-mcompact-shared").toString
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(root), spark.sparkContext.hadoopConfiguration)
     def p(s: String) = new org.apache.hadoop.fs.Path(s)
@@ -428,7 +428,7 @@ class SinksSpec extends SparkSpec {
     // manifest (default retainMillis = 0) re-published and silently
     // duplicated its rows. Tombstones (`#retired:` ranges, folded forward
     // across generations) make the publish-once record durable.
-    val root = Files.createTempDirectory("graft-mcompact-tomb").toString
+    val root = tempDir("graft-mcompact-tomb").toString
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(root), spark.sparkContext.hadoopConfiguration)
     def p(s: String) = new org.apache.hadoop.fs.Path(s)
@@ -472,7 +472,7 @@ class SinksSpec extends SparkSpec {
     // retired dirs a lazy reader was still scanning — silently violating
     // the retention guarantee. Protection now covers dirs referenced by
     // ANY on-disk manifest, retired included.
-    val root = Files.createTempDirectory("graft-vac-grace").toString
+    val root = tempDir("graft-vac-grace").toString
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(root), spark.sparkContext.hadoopConfiguration)
     def p(s: String) = new org.apache.hadoop.fs.Path(s)
@@ -498,7 +498,7 @@ class SinksSpec extends SparkSpec {
   }
 
   test("routedManifestedComposite: one manifest covers all routes — crash mid-fanout leaves NO route visible") {
-    val root = Files.createTempDirectory("graft-routes-comp").toString
+    val root = tempDir("graft-routes-comp").toString
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(root), spark.sparkContext.hadoopConfiguration)
     def p(s: String) = new org.apache.hadoop.fs.Path(s)
@@ -538,7 +538,7 @@ class SinksSpec extends SparkSpec {
   }
 
   test("composite root compaction is route-aware: rewrites never mix routes; tombstones apply") {
-    val root = Files.createTempDirectory("graft-routes-comp-c").toString
+    val root = tempDir("graft-routes-comp-c").toString
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(root), spark.sparkContext.hadoopConfiguration)
     def p(s: String) = new org.apache.hadoop.fs.Path(s)
@@ -590,7 +590,7 @@ class SinksSpec extends SparkSpec {
     // protected, so neither dir-level cleanup nor vacuum could touch it.
     // File-level reclamation deletes exactly the aged manifest's files no
     // live/in-grace manifest names, inside dirs that must survive.
-    val root = Files.createTempDirectory("graft-mcompact-leak").toString
+    val root = tempDir("graft-mcompact-leak").toString
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(root), spark.sparkContext.hadoopConfiguration)
     def p(s: String) = new org.apache.hadoop.fs.Path(s)
@@ -640,8 +640,8 @@ class SinksSpec extends SparkSpec {
     // re-executes batch 1 (at-least-once side effects). The tombstone in
     // compact-1 must make the re-publish a no-op — before round 15 this
     // silently doubled batch 1's rows.
-    val root = Files.createTempDirectory("graft-e2e-recovery").toString
-    val ck = Files.createTempDirectory("graft-e2e-recovery-ck").toString
+    val root = tempDir("graft-e2e-recovery").toString
+    val ck = tempDir("graft-e2e-recovery-ck").toString
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(root), spark.sparkContext.hadoopConfiguration)
     def p(s: String) = new org.apache.hadoop.fs.Path(s)
@@ -698,7 +698,7 @@ class SinksSpec extends SparkSpec {
   }
 
   test("manifestStats: the housekeeping-loop view tracks every lifecycle stage") {
-    val root = Files.createTempDirectory("graft-mstats").toString
+    val root = tempDir("graft-mstats").toString
     def stats(t: Long = 512L * 1024 * 1024) = Sinks.manifestStats(spark, root, t)
     // empty root
     assert(stats() == Sinks.ManifestStats(0, 0, 0L, 0, 0, 0, 0L, 0))
@@ -756,7 +756,7 @@ class SinksSpec extends SparkSpec {
     // Three seeds x 30 steps; any violation prints the exact op trace.
     for (seed <- Seq(11, 23, 47)) {
       val rnd = new scala.util.Random(seed)
-      val root = Files.createTempDirectory(s"graft-model-$seed").toString
+      val root = tempDir(s"graft-model-$seed").toString
       var nextId = 0L
       var published = Vector.empty[Long]
       def rowsOf(b: Long): Seq[Int] = (b * 10 until b * 10 + 10).map(_.toInt)
@@ -803,7 +803,7 @@ class SinksSpec extends SparkSpec {
     // file must stay route-pure (compaction must never mix routes).
     for (seed <- Seq(7, 31)) {
       val rnd = new scala.util.Random(seed)
-      val root = Files.createTempDirectory(s"graft-model-comp-$seed").toString
+      val root = tempDir(s"graft-model-comp-$seed").toString
       val routes = Seq("a", "b")
       var nextId = 0L
       var published = Vector.empty[Long]
@@ -864,7 +864,7 @@ class SinksSpec extends SparkSpec {
   }
 
   test("readManifested merges evolved batch schemas BEFORE any compaction") {
-    val root = Files.createTempDirectory("graft-manifest-merge").toString
+    val root = tempDir("graft-manifest-merge").toString
     Sinks.manifestedParquet((1 to 5).toDF("v"), root, batchId = 0)
     Sinks.manifestedParquet(Seq((6, "a"), (7, "b")).toDF("v", "tag"), root, batchId = 1)
     val back = Sinks.readManifested(spark, root)
@@ -875,7 +875,7 @@ class SinksSpec extends SparkSpec {
   }
 
   test("compactManifested merges evolved schemas instead of dropping the newer columns") {
-    val root = Files.createTempDirectory("graft-mcompact-schema").toString
+    val root = tempDir("graft-mcompact-schema").toString
     // batch 0: (v); batch 1 evolved additively: (v, tag)
     Sinks.manifestedParquet((1 to 5).toDF("v"), root, batchId = 0)
     Sinks.manifestedParquet(
@@ -890,7 +890,7 @@ class SinksSpec extends SparkSpec {
   }
 
   test("compactManifested is incremental: full-size files ride by reference, only small ones rewrite") {
-    val root = Files.createTempDirectory("graft-mcompact-incr").toString
+    val root = tempDir("graft-mcompact-incr").toString
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(root), spark.sparkContext.hadoopConfiguration)
     def p(s: String) = new org.apache.hadoop.fs.Path(s)
@@ -927,7 +927,7 @@ class SinksSpec extends SparkSpec {
     // One-compactor-at-a-time is a fenced guarantee, not a scaladoc
     // convention: the realistic ops failure is a redundant housekeeping
     // cron. The seam fires INSIDE the first compactor's lease window.
-    val root = Files.createTempDirectory("graft-lease").toString
+    val root = tempDir("graft-lease").toString
     def total() = Sinks.readManifested(spark, root)
       .agg(org.apache.spark.sql.functions.sum("v")).head().getLong(0)
     (0 until 3).foreach(b => Sinks.manifestedParquet(
@@ -950,7 +950,7 @@ class SinksSpec extends SparkSpec {
   }
 
   test("compactor lease: stale lease (crashed holder) is taken over; fresh foreign lease refuses") {
-    val root = Files.createTempDirectory("graft-lease-stale").toString
+    val root = tempDir("graft-lease-stale").toString
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(root), spark.sparkContext.hadoopConfiguration)
     def p(s: String) = new org.apache.hadoop.fs.Path(s)
@@ -990,7 +990,7 @@ class SinksSpec extends SparkSpec {
     // rename the stolen lease BACK, and refuse, leaving the competitor
     // fenced. The onStaleObserved seam injects the competitor exactly
     // inside that window.
-    val root = Files.createTempDirectory("graft-lease-steal").toString
+    val root = tempDir("graft-lease-steal").toString
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(root), spark.sparkContext.hadoopConfiguration)
     def p(s: String) = new org.apache.hadoop.fs.Path(s)
@@ -1039,7 +1039,7 @@ class SinksSpec extends SparkSpec {
     // fresh. Liveness stays by construction: the thread dies with the
     // JVM, so a lease nobody heartbeats (crashed holder) goes stale after
     // the same timeout — asserted in the second leg.
-    val root = Files.createTempDirectory("graft-lease-heartbeat").toString
+    val root = tempDir("graft-lease-heartbeat").toString
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(root), spark.sparkContext.hadoopConfiguration)
     def p(s: String) = new org.apache.hadoop.fs.Path(s)
@@ -1084,7 +1084,7 @@ class SinksSpec extends SparkSpec {
     // compaction cadence, aged-out never fires and retired state grows
     // without bound. The fix: each superseded manifest's ORIGINAL
     // retirement time rides forward as a `#retiredat:` stamp.
-    val root = Files.createTempDirectory("graft-retire-clock").toString
+    val root = tempDir("graft-retire-clock").toString
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(root), spark.sparkContext.hadoopConfiguration)
     def p(s: String) = new org.apache.hadoop.fs.Path(s)

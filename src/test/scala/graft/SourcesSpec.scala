@@ -19,7 +19,7 @@ class SourcesSpec extends SparkSpec {
   test("fileStream ingests a drop directory with per-trigger file admission") {
     FileProbe.rows.set(0)
     FileProbe.batches.set(0)
-    val dir = Files.createTempDirectory("graft-src")
+    val dir = tempDir("graft-src")
     val src = Paths.get("/root/testdata/sf0.001/nation.parquet")
     Files.copy(src, dir.resolve("a.parquet"), StandardCopyOption.REPLACE_EXISTING)
     Files.copy(src, dir.resolve("b.parquet"), StandardCopyOption.REPLACE_EXISTING)
@@ -117,7 +117,7 @@ class SourcesSpec extends SparkSpec {
 
   test("jsonl reader parses good lines and routes malformed lines to the dead-letter frame") {
     import org.apache.spark.sql.types._
-    val dir = Files.createTempDirectory("graft-jsonl")
+    val dir = tempDir("graft-jsonl")
     Files.write(
       dir.resolve("part-0.jsonl"),
       java.util.Arrays.asList(
@@ -150,7 +150,7 @@ class SourcesSpec extends SparkSpec {
 
   test("csv reader parses good lines and routes malformed lines to the dead-letter frame") {
     import org.apache.spark.sql.types._
-    val dir = Files.createTempDirectory("graft-csv")
+    val dir = tempDir("graft-csv")
     Files.write(
       dir.resolve("part-0.csv"),
       java.util.Arrays.asList(
@@ -181,7 +181,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("orc round-trip preserves schema; predicates and pruning reach the ORC scan") {
-    val dir = Files.createTempDirectory("graft-orc").resolve("docs").toString
+    val dir = tempDir("graft-orc").resolve("docs").toString
     val docs = graft.ops.Tables.documents(spark, "/root/testdata/sf0.001")
     docs.write.mode("overwrite").orc(dir)
     val back = Sources.orc(spark, dir)
@@ -214,7 +214,7 @@ class SourcesSpec extends SparkSpec {
     // schema merge is that contract (additive evolution only; renames or
     // type changes still require a rewrite pass)
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-evo").toString
+    val dir = tempDir("graft-evo").toString
     Seq((1L, "alpha")).toDF("id", "text").write.parquet(s"$dir/gen=1")
     Seq((2L, "beta", 0.9)).toDF("id", "text", "quality").write.parquet(s"$dir/gen=2")
     val df = spark.read.option("mergeSchema", true).parquet(dir)

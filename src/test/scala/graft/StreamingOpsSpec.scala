@@ -596,7 +596,7 @@ class StreamingOpsSpec extends SparkSpec {
   test("incremental admission: history grows across batches; later near-copy is rejected") {
     implicit val sql: org.apache.spark.sql.SQLContext = spark.sqlContext
     import graft.streaming.AdmissionStream
-    val dir = java.nio.file.Files.createTempDirectory("graft-admission")
+    val dir = tempDir("graft-admission")
     val historyDir = dir.resolve("history").toString
     val verdictDir = dir.resolve("verdicts").toString
     val docs = graft.ops.Tables
@@ -673,7 +673,7 @@ class StreamingOpsSpec extends SparkSpec {
   test("winnow-fingerprint admission: same gate discipline at a fraction of the history size") {
     implicit val sql: org.apache.spark.sql.SQLContext = spark.sqlContext
     import graft.streaming.AdmissionStream
-    val dir = java.nio.file.Files.createTempDirectory("graft-winnow-admission")
+    val dir = tempDir("graft-winnow-admission")
     val historyDir = dir.resolve("history").toString
     val verdictDir = dir.resolve("verdicts").toString
     val docs = graft.ops.Tables

@@ -5,8 +5,6 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.col
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
 
 /** The streaming window-top-1 arm (r13 prescription #5): the hand-written
   * `row_number() = 1` over a two-sided-bounded stream-stream join — a
@@ -19,9 +17,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * added to a live session), so this suite builds its own over the
   * shared SparkContext.
   */
-class StreamingTop1RewriteSpec extends AnyFunSuite with BeforeAndAfterAll {
+class StreamingTop1RewriteSpec extends SparkSpec {
 
-  lazy val spark: SparkSession = {
+  override lazy val spark: SparkSession = {
     SparkSpec.session // materialize the shared context first
     // builder.create() (NOT getOrCreate): a brand-new session over the
     // existing context, with builder-time extensions, leaving the
@@ -36,8 +34,6 @@ class StreamingTop1RewriteSpec extends AnyFunSuite with BeforeAndAfterAll {
       .withExtensions(new graft.GraftExtensions()(_))
       .create()
   }
-
-  override def afterAll(): Unit = ()
 
   import spark.implicits._
 
@@ -293,7 +289,7 @@ class StreamingTop1RewriteSpec extends AnyFunSuite with BeforeAndAfterAll {
       if (cand.isEmpty) None else Some((u, cid, cand.maxBy(r => (r._3.getTime, r._2))._2))
     }.toSet
     implicit val sql: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val checkpoint = java.nio.file.Files.createTempDirectory("graft-top1-restart").toString
+    val checkpoint = tempDir("graft-top1-restart").toString
     val out = new ConcurrentLinkedQueue[(Long, Long, Long)]()
     def start(
         cs: MemoryStream[(Long, Long, Timestamp)],

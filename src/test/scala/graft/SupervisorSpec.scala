@@ -60,7 +60,7 @@ class SupervisorSpec extends SparkSpec {
     Supervisor.reset("sup-restart")
     val q = QueueSource.create("sup-q1", None)
     val collectorId = "sup-collector-1"
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-sup-ckpt").toString
+    val ckpt = tempDir("graft-sup-ckpt").toString
     try {
       q.push("a", "b", "c")
       // one-shot transformer crash before any message enters the stage
@@ -94,6 +94,9 @@ class SupervisorSpec extends SparkSpec {
         val acked = AckCollector.drain(collectorId).flatMap(_.successful).map(_.data.asInstanceOf[String])
         assert(acked.sorted == Seq("a", "b", "c"))
       } finally running.stop()
+      // the progress totals followed the restarted run, then left the session
+      assert(running.progress.inputRows == 3, s"progress: ${running.progress}")
+      assert(!listening(running), "progress listener leaked")
     } finally {
       QueueSource.remove("sup-q1")
       AckCollector.clear(collectorId)
@@ -106,7 +109,7 @@ class SupervisorSpec extends SparkSpec {
     Supervisor.reset("sup-giveup")
     val q = QueueSource.create("sup-q2", None)
     val collectorId = "sup-collector-2"
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-sup-ckpt2").toString
+    val ckpt = tempDir("graft-sup-ckpt2").toString
     try {
       q.push("x")
       val cfg = PipelineConfig[String](
@@ -127,6 +130,7 @@ class SupervisorSpec extends SparkSpec {
         SupervisorProbe.alwaysCrash.set(false)
         Thread.sleep(500)
         assert(!running.query.isActive)
+        assert(awaitUntil(15000)(!listening(running)), "progress listener leaked after give-up")
       } finally {
         SupervisorProbe.alwaysCrash.set(false)
         try running.stop()
@@ -163,12 +167,12 @@ class SupervisorSpec extends SparkSpec {
         "clean termination left the supervision record behind"
       )
       assert(Supervisor.restartCount("sup-clean") == 0 && !Supervisor.gaveUp("sup-clean"))
+      assert(awaitUntil(15000)(!listening(running)), "clean termination left the progress listener behind")
     } finally {
       QueueSource.remove("sup-q3")
       AckCollector.clear(collectorId)
       Supervisor.reset("sup-clean")
       graft.runtime.PipelineRegistry.unregister("sup-clean")
-      graft.runtime.StageCounters.remove("sup-clean")
     }
   }
 
@@ -189,18 +193,16 @@ class SupervisorSpec extends SparkSpec {
         Pipeline.start(spark, queueMessages("sup-q4", injectCrash = true), cfg, CallerAcknowledger(collectorId))
       assert(awaitUntil(30000)(!running.query.isActive), "query never crashed")
       // awaitTermination rethrows the crash — stop() must release the
-      // registry entry, counters, and rate limiter anyway (its own finally)
+      // registry entry, progress listener and rate limiter anyway (its own
+      // finally)
       intercept[Exception](running.stop())
       assert(!graft.runtime.PipelineRegistry.allRunning.contains("sup-crashed"), "registry entry leaked")
-      // the LIVE counter registry must be released (leak check); the
-      // Running handle itself keeps a post-mortem snapshot by design
-      assert(graft.runtime.StageCounters.metricsOf("sup-crashed").isEmpty, "stage counters leaked")
+      assert(awaitUntil(15000)(!listening(running)), "progress listener leaked after stopping a crashed run")
     } finally {
       SupervisorProbe.reset()
       QueueSource.remove("sup-q4")
       AckCollector.clear(collectorId)
       graft.runtime.PipelineRegistry.unregister("sup-crashed")
-      graft.runtime.StageCounters.remove("sup-crashed")
     }
   }
 }

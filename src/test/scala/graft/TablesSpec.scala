@@ -26,7 +26,7 @@ class TablesSpec extends SparkSpec {
   /** A table directory holding one single-file `documents` table. */
   private lazy val sfDir = {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_tables_docs")
+    val dir = tempDir("graft_tables_docs")
     val docs = (1L to 40L).map(i => (i, s"text $i", if (i % 3 == 0) "de" else "en", s"src${i % 4}", 5L + i))
     writeTable(docs.toDF("doc_id", "text", "lang", "source", "n_chars"), dir, "documents")
     dir.toString
@@ -66,7 +66,7 @@ class TablesSpec extends SparkSpec {
     * whatever is there (the testdata layout: one file per table).
     */
   private def writeTable(df: DataFrame, dir: Path, name: String): Unit = {
-    val out = Files.createTempDirectory("graft_tables_out")
+    val out = tempDir("graft_tables_out")
     df.coalesce(1).write.mode("overwrite").parquet(out.resolve("d").toString)
     val part = Files.list(out.resolve("d")).iterator().asScala
       .find(p => p.getFileName.toString.startsWith("part-")).get
@@ -100,7 +100,7 @@ class TablesSpec extends SparkSpec {
 
   test("a file rewritten at the same path with another schema is re-resolved") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_tables")
+    val dir = tempDir("graft_tables")
     writeTable(Seq((1L, "a"), (2L, "b")).toDF("id", "name"), dir, "t")
     val first = Tables.table(spark, dir.toString, "t")
     assert(first.schema.map(f => f.name -> f.dataType) == Seq("id" -> LongType, "name" -> StringType))
@@ -121,7 +121,7 @@ class TablesSpec extends SparkSpec {
     import spark.implicits._
     // written without Spark's schema in the footer, which would otherwise
     // override the conf: a plain parquet-mr file with an unannotated binary
-    val dir = Files.createTempDirectory("graft_tables_bin")
+    val dir = tempDir("graft_tables_bin")
     val schema = MessageTypeParser.parseMessageType("message b { required int64 id; required binary payload; }")
     val out = HadoopOutputFile.fromPath(
       new HadoopPath(dir.resolve("b.parquet").toUri), spark.sparkContext.hadoopConfiguration)

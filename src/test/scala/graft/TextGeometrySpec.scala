@@ -74,7 +74,7 @@ class TextGeometrySpec extends SparkSpec {
       val base = if (isDup) id - 1 else id
       (id, text(base * 7919L, if (isDup) 30 else -1), "en", s"src${id % 3}", 360L)
     }
-    val dir = java.nio.file.Files.createTempDirectory("graft-textgeom").toString
+    val dir = tempDir("graft-textgeom").toString
     docs.toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val planted = (0L until 60L).collect { case id if id % 5 == 0 && id > 0 => (id - 1, id) }.toSet
