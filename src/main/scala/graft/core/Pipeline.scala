@@ -483,7 +483,7 @@ final class RunningPipeline[A](
   private[graft] def release(): Unit = {
     rateLimiter.foreach(_.shutdown())
     progressTotals.close()
-    PipelineRegistry.unregister(name)
+    PipelineRegistry.unregister(this)
   }
 
   def topology: TopologyInfo =

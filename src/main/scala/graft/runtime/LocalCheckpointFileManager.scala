@@ -34,7 +34,8 @@ import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileMana
   *    checkpoint. On a filesystem without hard links it falls back to
   *    Hadoop's own check-then-rename.
   * `cancel` deletes the temp file. Like Hadoop's local filesystem, no
-  * write is fsynced.
+  * write is fsynced. `mkdirs` on a `file:` path is java.nio's
+  * `createDirectories`.
   */
 class LocalCheckpointFileManager(path: Path, hadoopConf: Configuration) extends CheckpointFileManager {
 
@@ -89,7 +90,17 @@ class LocalCheckpointFileManager(path: Path, hadoopConf: Configuration) extends 
 
   override def open(p: Path): FSDataInputStream = delegate.open(p)
   override def list(p: Path, filter: PathFilter): Array[FileStatus] = delegate.list(p, filter)
-  override def mkdirs(p: Path): Unit = delegate.mkdirs(p)
+  /** On a `file:` path, java.nio: Hadoop's local `mkdirs` starts a `chmod`
+    * child process per directory it creates.
+    */
+  override def mkdirs(p: Path): Unit =
+    if (p.toUri.getScheme != "file") delegate.mkdirs(p)
+    else
+      try { Files.createDirectories(Paths.get(p.toUri.getPath)); () }
+      catch {
+        case e: NioFileAlreadyExistsException =>
+          throw new FileAlreadyExistsException(s"$p exists and is not a directory").initCause(e)
+      }
   override def exists(p: Path): Boolean = delegate.exists(p)
   override def delete(p: Path): Unit = delegate.delete(p)
   override def isLocal: Boolean = delegate.isLocal

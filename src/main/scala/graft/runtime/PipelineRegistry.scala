@@ -21,8 +21,16 @@ object PipelineRegistry {
     storage = s
   }
 
-  def register(p: graft.core.RunningPipeline[_]): Unit = storage.put(p.name, p)
-  def unregister(name: String): Unit = { storage.delete(name); () }
+  def register(p: graft.core.RunningPipeline[_]): Unit = synchronized(storage.put(p.name, p))
+
+  /** Remove `p`'s registration while it is still the one stored under its
+    * name: a later same-named pipeline (another session) replaced it, so
+    * stopping `p` leaves that one registered.
+    */
+  def unregister(p: graft.core.RunningPipeline[_]): Unit = synchronized {
+    if (storage.get(p.name).exists(_ eq p)) storage.delete(p.name)
+    ()
+  }
   def get(name: String): Option[graft.core.RunningPipeline[_]] = storage.get(name)
   def allRunning: Seq[String] = storage.list()
 

@@ -3,7 +3,8 @@ package graft.sources
 import java.util
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicLong
-import scala.collection.mutable.ArrayBuffer
+import scala.collection.immutable.ArraySeq
+import scala.collection.mutable.ArrayDeque
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -28,6 +29,10 @@ import graft.core.RateLimiter
   *    trail processing by one trigger — the offset LOG is the durable
   *    ledger; `commit` is the cleanup callback (at-least-once on recovery,
   *    same as the reference's delivery stance, broadway.ex:28-30).
+  *    After the ack the committed range is dropped, so the queue holds
+  *    only uncommitted messages (see [[QueueSource.Handle]]);
+  *  - a query with no offset log starts at the committed offset: a fresh
+  *    checkpoint does not replay acked messages.
   *
   * The queue itself is the SQS/PubSub stand-in for tests and local runs; on
   * a cluster the same Scan/Stream shape would front a real client. Schema:
@@ -43,50 +48,85 @@ import graft.core.RateLimiter
   */
 object QueueSource {
 
+  /** One named queue. It keeps only the messages that are not committed
+    * yet: `commitUpTo(end)` hands `[committed, end)` to `onAck`, then drops
+    * it, the way an SQS delete forgets an acked message. Offsets stay
+    * logical: `size` is the end offset (every message ever pushed, not the
+    * retained count) and `committedOffset` is the offset of the oldest
+    * retained message.
+    *
+    * Keeping only the uncommitted tail is enough because Spark never reads
+    * a committed offset again (`MicroBatchStream.commit` contract): it
+    * calls `commit(N-1)` only after batch N's offsets are logged, so a
+    * restart re-reads at most the logged, uncommitted range, and
+    * `QueueAcknowledger`'s requeue reads `originalValue` inside batch N,
+    * before `commit(N)`. A read below `committedOffset` (two queries on one
+    * queue, or a checkpoint older than the queue's commits) throws an
+    * `IllegalStateException` naming the queue and the offsets; it never
+    * returns fewer rows.
+    *
+    * `push`, the readers and `commitUpTo` take the handle's lock; `onAck`
+    * runs under it, so it must not wait on another thread that uses this
+    * queue.
+    */
   final class Handle(val name: String, val rateLimiter: Option[RateLimiter]) {
-    private[sources] val data = new ArrayBuffer[String]()
+    // the uncommitted messages; `retained(0)` is at offset `base`
+    private val retained = new ArrayDeque[String]()
+    @volatile private var base = 0L // offset acked back; written under the lock
     private[sources] val admitted = new AtomicLong(0L) // offset admitted to Spark
-    private[sources] val committed = new AtomicLong(0L) // offset acked back
-    private[sources] val ackLog = new ArrayBuffer[Seq[String]]()
     @volatile var onAck: Seq[String] => Unit = _ => ()
 
-    def push(values: String*): Unit = data.synchronized { data ++= values }
+    def push(values: String*): Unit = synchronized { retained ++= values; () }
 
-    def size: Int = data.synchronized(data.size)
+    /** The logical end offset: how many messages were ever pushed. */
+    def size: Long = synchronized(base + retained.size)
 
     def admittedOffset: Long = admitted.get()
-    def committedOffset: Long = committed.get()
+    def committedOffset: Long = base
 
-    /** Ack batches delivered so far (each = one committed range). */
-    def acks: Seq[Seq[String]] = ackLog.synchronized(ackLog.toVector)
+    /** How many messages the handle holds: those at or past `committedOffset`. */
+    private[graft] def retainedCount: Int = synchronized(retained.size)
 
-    private[sources] def valuesInRange(from: Long, until: Long): Seq[(Long, String)] =
-      data.synchronized((from until until).map(i => i -> data(i.toInt)))
+    /** The payloads at `[from, until)`, which must lie in `[committedOffset, size]`. */
+    private[sources] def valuesInRange(from: Long, until: Long): Array[String] = synchronized {
+      val end = base + retained.size
+      if (from < base || until > end || from > until)
+        throw new IllegalStateException(
+          s"queue '$name': offsets [$from, $until) requested, but it retains only [$base, $end)" +
+            (if (from < base) s"; offsets below $base are committed and dropped" else ""))
+      val out = new Array[String]((until - from).toInt)
+      retained.copySliceToArray((from - base).toInt, out, 0, out.length)
+      out
+    }
 
-    /** The original payload at an offset (for redelivery). */
-    def originalValue(offset: Long): Option[String] =
-      data.synchronized(if (offset >= 0 && offset < data.size) Some(data(offset.toInt)) else None)
+    /** The original payload at an offset (for redelivery); None past the
+      * end. Throws below `committedOffset`: that message is acked and gone.
+      */
+    def originalValue(offset: Long): Option[String] = synchronized {
+      if (offset >= base + retained.size) None else Some(valuesInRange(offset, offset + 1)(0))
+    }
 
     /** Admission: grant up to the rate budget of the pending backlog. */
     private[sources] def admit(): Long = {
-      val pending = size - admitted.get()
+      val pending = math.min(size - admitted.get(), Int.MaxValue.toLong).toInt
       if (pending <= 0) admitted.get()
       else {
         val grant = rateLimiter match {
-          case Some(rl) => rl.tryAcquire(pending.toInt)
-          case None     => pending.toInt
+          case Some(rl) => rl.tryAcquire(pending)
+          case None     => pending
         }
         admitted.addAndGet(grant.toLong)
       }
     }
 
-    private[sources] def commitUpTo(offset: Long): Unit = {
-      val from = committed.get()
-      if (offset > from) {
-        val vals = valuesInRange(from, offset).map(_._2)
-        committed.set(offset)
-        ackLog.synchronized { ackLog += vals }
-        onAck(vals)
+    /** Acks `[committedOffset, offset)` through `onAck`, then drops it. If
+      * `onAck` throws, nothing is dropped and the commit fails.
+      */
+    private[sources] def commitUpTo(offset: Long): Unit = synchronized {
+      if (offset > base) {
+        onAck(ArraySeq.unsafeWrapArray(valuesInRange(base, offset)))
+        retained.dropInPlace((offset - base).toInt)
+        base = offset
       }
     }
   }
@@ -189,7 +229,10 @@ final class QueueTable(queueName: String) extends Table with SupportsRead {
 final class QueueMicroBatchStream(queueName: String, slots: Int) extends MicroBatchStream {
   private def handle = QueueSource.get(queueName)
 
-  override def initialOffset(): Offset = QueueOffset(0L)
+  /** A query with no offset log (a fresh checkpoint) starts at the first
+    * unacked message, as on SQS: committed messages are gone.
+    */
+  override def initialOffset(): Offset = QueueOffset(handle.committedOffset)
 
   /** Called once per trigger: this is the admission gate. */
   override def latestOffset(): Offset = QueueOffset(handle.admit())
@@ -209,12 +252,12 @@ final class QueueMicroBatchStream(queueName: String, slots: Int) extends MicroBa
   override def createReaderFactory(): PartitionReaderFactory = new PartitionReaderFactory {
     override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
       val p = partition.asInstanceOf[QueueInputPartition]
-      val rows = QueueSource.get(p.queue).valuesInRange(p.start, p.end).iterator
+      val values = QueueSource.get(p.queue).valuesInRange(p.start, p.end)
       new PartitionReader[InternalRow] {
-        private var current: (Long, String) = _
-        override def next(): Boolean = { val has = rows.hasNext; if (has) current = rows.next(); has }
+        private var i = -1
+        override def next(): Boolean = { i += 1; i < values.length }
         override def get(): InternalRow =
-          InternalRow(current._1, UTF8String.fromString(current._2))
+          InternalRow(p.start + i, UTF8String.fromString(values(i)))
         override def close(): Unit = ()
       }
     }

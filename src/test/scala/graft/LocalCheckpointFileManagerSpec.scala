@@ -3,9 +3,11 @@ package graft
 import java.net.URI
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path => NioPath}
+import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileAlreadyExistsException, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager, FileContextBasedCheckpointFileManager, FileSystemBasedCheckpointFileManager}
 import graft.runtime.LocalCheckpointFileManager
 
@@ -15,6 +17,14 @@ import graft.runtime.LocalCheckpointFileManager
 class FakeSchemeFileSystem extends RawLocalFileSystem {
   override def getUri: URI = URI.create("fake:///")
   override def getScheme: String = "fake"
+  override def mkdirs(p: Path, permission: FsPermission): Boolean = {
+    FakeSchemeFileSystem.mkdirsCalls.incrementAndGet()
+    super.mkdirs(p, permission)
+  }
+}
+
+object FakeSchemeFileSystem {
+  val mkdirsCalls = new AtomicInteger(0)
 }
 
 /** `LocalCheckpointFileManager`: java.nio atomic writes on `file:` paths,
@@ -108,6 +118,40 @@ class LocalCheckpointFileManagerSpec extends SparkSpec {
       out.close()
       assert(new String(Files.readAllBytes(dir.resolve("0")), UTF_8) == "delegated")
       assert(read(fm, new Path(root, "0")) == "delegated")
+    }
+  }
+
+  test("mkdirs on a local path creates nested directories and is idempotent") {
+    withDir { dir =>
+      val fm = new LocalCheckpointFileManager(hpath(dir), conf)
+      val nested = dir.resolve("state").resolve("0").resolve("3")
+      fm.mkdirs(hpath(nested))
+      assert(Files.isDirectory(nested))
+      Files.write(nested.resolve("1.delta"), "kept".getBytes(UTF_8))
+      fm.mkdirs(hpath(nested))
+      fm.mkdirs(hpath(dir.resolve("state")))
+      assert(new String(Files.readAllBytes(nested.resolve("1.delta")), UTF_8) == "kept")
+    }
+  }
+
+  test("mkdirs on an existing file fails and leaves the file") {
+    withDir { dir =>
+      val fm = new LocalCheckpointFileManager(hpath(dir), conf)
+      val file = dir.resolve("offsets")
+      Files.write(file, "a file".getBytes(UTF_8))
+      intercept[FileAlreadyExistsException](fm.mkdirs(hpath(file)))
+      assert(Files.isRegularFile(file) && new String(Files.readAllBytes(file), UTF_8) == "a file")
+    }
+  }
+
+  test("mkdirs on a path that is not file: goes to Spark's default manager") {
+    withDir { dir =>
+      val root = new Path(s"fake://${dir.toUri.getPath}")
+      val fm = new LocalCheckpointFileManager(root, conf)
+      val before = FakeSchemeFileSystem.mkdirsCalls.get()
+      fm.mkdirs(new Path(root, "commits/x"))
+      assert(FakeSchemeFileSystem.mkdirsCalls.get() > before, "the fake: filesystem's mkdirs was not called")
+      assert(Files.isDirectory(dir.resolve("commits").resolve("x")))
     }
   }
 }

@@ -123,7 +123,8 @@ class PipelineSpec extends SparkSpec {
     val collectorId = s"handover-acks-$tag"
     val ckpt = tempDir("graft-ckpt-handover")
     val v = (1 to 20).map(i => s"m$i")
-    QueueSource.create(queue, None)
+    val sourceAcks = new ConcurrentLinkedQueue[Seq[String]]()
+    QueueSource.create(queue, None).onAck = vs => { sourceAcks.add(vs); () }
     try {
       val run1 = withFileManager(first)(queueRun(queue, ckpt, collectorId, v.take(10).grouped(5).toSeq))
       val run2 = withFileManager(second) {
@@ -141,7 +142,7 @@ class PipelineSpec extends SparkSpec {
       assert(acked.sorted == v.sorted, s"not acked exactly once: $acked")
       // the source commits a batch when the next one is planned, so the
       // restart commits the first run's last batch and the final batch stays open
-      assert(QueueSource.get(queue).acks.flatten == v.take(15))
+      assert(sourceAcks.asScala.toSeq.flatten == v.take(15))
     } finally {
       QueueSource.remove(queue)
       AckCollector.clear(collectorId)
@@ -301,6 +302,21 @@ class PipelineSpec extends SparkSpec {
     } finally { tp1.stop(); tp2.stop() }
     assert(tp1.running.progress.inputRows == 5, s"first pipeline: ${tp1.running.progress}")
     assert(!listening(tp1.running), "progress listener left on the first session")
+  }
+
+  // The registry is keyed by name: stopping one of two same-named pipelines
+  // (two sessions) must not unregister the one still running.
+  test("stopping one of two same-named pipelines leaves the other registered") {
+    val a = new TestPipeline(spark, simpleConfig("same-name-registry"))
+    val b = new TestPipeline(spark.newSession(), simpleConfig("same-name-registry"))
+    try {
+      a.stop()
+      assert(PipelineRegistry.get("same-name-registry").exists(_ eq b.running), "the running pipeline was unregistered")
+      assert(PipelineRegistry.allRunning.contains("same-name-registry"))
+      b.stop()
+      assert(PipelineRegistry.get("same-name-registry").isEmpty)
+      assert(!PipelineRegistry.allRunning.contains("same-name-registry"))
+    } finally { a.stop(); b.stop() }
   }
 
   // recentProgress is a ring of spark.sql.streaming.numRecentProgressUpdates

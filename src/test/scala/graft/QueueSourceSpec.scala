@@ -1,8 +1,9 @@
 package graft
 
 import java.util.concurrent.ConcurrentLinkedQueue
+import scala.jdk.CollectionConverters._
 import graft.core.RateLimiter
-import graft.sources.QueueSource
+import graft.sources.{QueueInputPartition, QueueMicroBatchStream, QueueOffset, QueueSource, QueueTable}
 
 object QueueProbe {
   val rows = new ConcurrentLinkedQueue[(Long, String)]()
@@ -32,6 +33,8 @@ class QueueSourceSpec extends SparkSpec {
     QueueProbe.clear()
     val rl = new RateLimiter(3, 600000) // 3 messages per (long) interval
     val q = QueueSource.create("spec-q1", Some(rl))
+    val acks = new ConcurrentLinkedQueue[Seq[String]]()
+    q.onAck = vals => { acks.add(vals); () }
     try {
       q.push((1 to 10).map(i => s"m$i"): _*)
       val df = spark.readStream
@@ -57,13 +60,13 @@ class QueueSourceSpec extends SparkSpec {
         val rest = QueueProbe.drain()
         assert(rest.map(_._2) == (4 to 10).map(i => s"m$i"))
         assert(q.committedOffset >= 3)
-        assert(q.acks.flatten.take(3) == Seq("m1", "m2", "m3"))
+        assert(acks.asScala.toSeq.flatten.take(3) == Seq("m1", "m2", "m3"))
 
         // one more batch commits the m4..m10 range
         q.push("m11")
         query.processAllAvailable()
         assert(q.committedOffset >= 10)
-        assert(q.acks.flatten.take(10) == (1 to 10).map(i => s"m$i"))
+        assert(acks.asScala.toSeq.flatten.take(10) == (1 to 10).map(i => s"m$i"))
       } finally query.stop()
     } finally {
       rl.shutdown()
@@ -82,6 +85,8 @@ class QueueSourceSpec extends SparkSpec {
     import graft.sources.QueueAcknowledger
     RequeueProbe.clear()
     val q = QueueSource.create("spec-q3", None)
+    val acks = new ConcurrentLinkedQueue[Seq[String]]()
+    q.onAck = vals => { acks.add(vals); () }
     try {
       q.push("good-1", "bad-2", "good-3")
       val messages = spark.readStream
@@ -111,9 +116,15 @@ class QueueSourceSpec extends SparkSpec {
         assert(RequeueProbe.attempts.get("bad-2") == 2, s"attempts=${RequeueProbe.attempts}")
         assert(RequeueProbe.attempts.get("good-1") == 1)
         assert(q.size == 4, s"queue should hold original 3 + 1 requeued copy, size=${q.size}")
-        // the redelivered payload is the ORIGINAL, not the uppercased data
-        assert(q.originalValue(3L).contains("bad-2"), s"requeued=${q.originalValue(3L)}")
         assert(!RequeueProbe.attempts.containsKey("BAD-2"), "transformed data leaked into the queue")
+        // the redelivered payload is the ORIGINAL, not the uppercased data:
+        // one more trigger commits offset 3, and the source acks bad-2 there
+        // (committed ranges are contiguous from offset 0)
+        q.push("tail")
+        running.processAllAvailable()
+        assert(q.committedOffset == 4, s"committed=${q.committedOffset}")
+        val acked = acks.asScala.toSeq.flatten
+        assert(acked.lift(3).contains("bad-2"), s"requeued=${acked.lift(3)} in $acked")
       } finally running.stop()
     } finally {
       QueueSource.remove("spec-q3")
@@ -156,17 +167,92 @@ class QueueSourceSpec extends SparkSpec {
     } finally QueueSource.remove("spec-q2")
   }
 
-  private def planned(queue: String, start: Long, end: Long): Seq[(Long, Long)] = {
-    import graft.sources.{QueueInputPartition, QueueOffset, QueueTable}
-    val stream = new QueueTable(queue)
+  private def stream(queue: String): QueueMicroBatchStream =
+    new QueueTable(queue)
       .newScanBuilder(org.apache.spark.sql.util.CaseInsensitiveStringMap.empty())
       .build()
       .toMicroBatchStream("unused")
-    stream.planInputPartitions(QueueOffset(start), QueueOffset(end)).toSeq.map {
+      .asInstanceOf[QueueMicroBatchStream]
+
+  private def planned(queue: String, start: Long, end: Long): Seq[(Long, Long)] =
+    stream(queue).planInputPartitions(QueueOffset(start), QueueOffset(end)).toSeq.map {
       case p: QueueInputPartition =>
         assert(p.queue == queue)
         (p.start, p.end)
     }
+
+  /** The rows a reader of `[start, end)` returns, as (offset, value). */
+  private def read(queue: String, start: Long, end: Long): Seq[(Long, String)] = {
+    val reader = stream(queue).createReaderFactory().createReader(QueueInputPartition(queue, start, end))
+    try Iterator.continually(reader.next()).takeWhile(identity)
+      .map(_ => (reader.get().getLong(0), reader.get().getUTF8String(1).toString)).toSeq
+    finally reader.close()
+  }
+
+  /** A foreachBatch query on `queue` (fresh checkpoint) that records every
+    * row it reads in QueueProbe.
+    */
+  private def probeQuery(queue: String) =
+    spark.readStream
+      .format("graft.sources.QueueSourceProvider")
+      .option("queue", queue)
+      .load()
+      .writeStream
+      .foreachBatch { (d: org.apache.spark.sql.DataFrame, _: Long) =>
+        d.collect().foreach(r => QueueProbe.rows.add((r.getLong(0), r.getString(1))))
+        ()
+      }
+      .start()
+
+  test("the handle drops committed messages: it retains at most the last uncommitted range") {
+    QueueProbe.clear()
+    val q = QueueSource.create("spec-retain", None)
+    val acks = new ConcurrentLinkedQueue[Seq[String]]()
+    q.onAck = vals => { acks.add(vals); () }
+    val values = (0 until 50 * 1000).map(i => s"v$i")
+    try {
+      val query = probeQuery("spec-retain")
+      try values.grouped(1000).zipWithIndex.foreach { case (wave, i) =>
+        q.push(wave: _*)
+        query.processAllAvailable()
+        // this trigger's range stays until the next trigger commits it
+        assert(q.retainedCount <= 1000, s"after trigger $i the handle retains ${q.retainedCount}")
+        assert(q.retainedCount == q.size - q.committedOffset)
+      } finally query.stop()
+      assert(q.size == 50000L && q.committedOffset == 49000L, s"size ${q.size}, committed ${q.committedOffset}")
+      assert(q.retainedCount == 1000)
+      // every offset is read once with its own value, and every committed
+      // one is acked once, in order
+      assert(QueueProbe.drain().sortBy(_._1) == values.indices.map(i => (i.toLong, values(i))))
+      assert(acks.asScala.toSeq.flatten == values.take(49000))
+    } finally QueueSource.remove("spec-retain")
+  }
+
+  test("a read below the committed offset throws; a fresh checkpoint starts at it") {
+    QueueProbe.clear()
+    val q = QueueSource.create("spec-below", None)
+    try {
+      q.push("a", "b", "c", "d", "e")
+      val s = stream("spec-below")
+      assert(s.initialOffset() == QueueOffset(0L))
+      s.commit(QueueOffset(3L))
+      assert(q.committedOffset == 3L && q.retainedCount == 2 && q.size == 5L)
+      assert(s.initialOffset() == QueueOffset(3L))
+      assert(read("spec-below", 3L, 5L) == Seq(3L -> "d", 4L -> "e"))
+      assert(q.originalValue(4L).contains("e") && q.originalValue(5L).isEmpty)
+      val below = Seq(
+        intercept[IllegalStateException](read("spec-below", 2L, 5L)),
+        intercept[IllegalStateException](q.originalValue(1L)))
+      below.foreach { e =>
+        assert(e.getMessage.contains("'spec-below'") && e.getMessage.contains("below 3"), e.getMessage)
+      }
+      assert(below.head.getMessage.contains("[2, 5)") && below(1).getMessage.contains("[1, 2)"))
+      // a query on a fresh checkpoint reads from the first unacked message
+      val query = probeQuery("spec-below")
+      try query.processAllAvailable()
+      finally query.stop()
+      assert(QueueProbe.drain() == Seq(3L -> "d", 4L -> "e"))
+    } finally QueueSource.remove("spec-below")
   }
 
   test("a micro-batch is planned as defaultParallelism contiguous, disjoint ranges") {

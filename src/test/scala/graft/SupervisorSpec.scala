@@ -172,7 +172,7 @@ class SupervisorSpec extends SparkSpec {
       QueueSource.remove("sup-q3")
       AckCollector.clear(collectorId)
       Supervisor.reset("sup-clean")
-      graft.runtime.PipelineRegistry.unregister("sup-clean")
+      graft.runtime.PipelineRegistry.get("sup-clean").foreach(graft.runtime.PipelineRegistry.unregister)
     }
   }
 
@@ -202,7 +202,7 @@ class SupervisorSpec extends SparkSpec {
       SupervisorProbe.reset()
       QueueSource.remove("sup-q4")
       AckCollector.clear(collectorId)
-      graft.runtime.PipelineRegistry.unregister("sup-crashed")
+      graft.runtime.PipelineRegistry.get("sup-crashed").foreach(graft.runtime.PipelineRegistry.unregister)
     }
   }
 }
