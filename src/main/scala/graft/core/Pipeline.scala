@@ -1,5 +1,8 @@
 package graft.core
 
+import java.util.UUID
+import java.util.concurrent.atomic.AtomicReference
+import scala.collection.mutable
 import scala.util.control.NonFatal
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
@@ -303,8 +306,10 @@ object Pipeline {
   /** Start a streaming pipeline over a source of already-wrapped messages.
     * The analog of `Broadway.start_link/2` (broadway.ex:1123-1162):
     * validates config, assembles the lineage, registers the running query.
-    * The returned handle owns the pipeline's metrics: its stage counters
-    * and a [[graft.runtime.ProgressTotals]] on the query's session.
+    * The returned handle owns the pipeline's metrics and, with a
+    * `restartPolicy`, its restarts: its stage counters and a
+    * [[graft.runtime.ProgressTotals]] on the session the query runs in,
+    * `source.sparkSession`, whose crash hook restarts the query.
     */
   def start[A](
       spark: SparkSession,
@@ -318,9 +323,10 @@ object Pipeline {
       case Right(_)  => ()
     }
     config.prepareForStart()
-    useLocalCheckpointLogs(spark)
+    val session = source.sparkSession
+    useLocalCheckpointLogs(session)
     val counters = StageCounters.create(spark.sparkContext, config.name, config.batchers.map(_.name))
-    val totals = ProgressTotals.on(source.sparkSession)
+    val totals = ProgressTotals.on(session)
     def build(): StreamingQuery = {
       val writer = source.writeStream
         .queryName(config.name)
@@ -345,8 +351,12 @@ object Pipeline {
           totals.close()
           throw e
       }
-    val running = new RunningPipeline[A](config, firstRun, rateLimiter, counters, totals, producers)
-    config.restartPolicy.foreach(p => graft.runtime.Supervisor.supervise(spark, running, p, () => build()))
+    val running = new RunningPipeline[A](config, firstRun, rateLimiter, counters, totals, producers, () => build())
+    if (config.restartPolicy.isDefined) {
+      totals.onCrash = running.crashed
+      // the first run may have crashed before the hook was set
+      running.watch(firstRun)
+    }
     // Registration can throw with a pluggable backend (name validation,
     // descriptor I/O). At this point the query is already started and
     // supervised — swallowing the failure OR propagating it bare would
@@ -399,6 +409,28 @@ object StopReason {
   * `Broadway.topology/1|all_running/0|stop/3` (broadway.ex:1184-1276,
   * 1525-1539) and the Terminator's graceful drain (topology/terminator.ex:
   * 41-60): process everything in flight, then stop.
+  *
+  * With `config.restartPolicy` it is also the pipeline's own supervisor,
+  * the analog of the per-pipeline supervision tree (topology.ex:506-557:
+  * crashed stages restart and resubscribe, tested at
+  * test/broadway_test.exs:2070-2347). Spark's unit of failure is the whole
+  * `StreamingQuery`: when the run dies with an exception, the pipeline's
+  * [[graft.runtime.ProgressTotals]] listener calls [[crashed]], and the
+  * query is rebuilt with `rebuild` and restarted from its checkpoint — the
+  * offset log replays the failed micro-batch, so an idempotent sink sees
+  * each message once. Restarts are budgeted by `RestartPolicy`
+  * (`maxRestarts` within a sliding `withinSeconds` window); past the
+  * budget the pipeline gives up for good and releases its runtime
+  * resources. The restart state below belongs to this pipeline alone.
+  *
+  * The restart runs on a daemon thread, not the listener bus thread:
+  * `DataStreamWriter.start` itself posts listener events. Two races:
+  *  - an intentional `stop()` against an in-flight restart: `stop()` sets
+  *    `cancelled` before it reads the query, and the restart thread
+  *    re-checks it after `rebuild()` and after swapping the run in;
+  *  - a run that crashes before anything watches it: [[watch]] re-checks
+  *    the run once it is watched. A run is claimed by a compare-and-set on
+  *    `watched`, so the listener and the re-check restart it once.
   */
 final class RunningPipeline[A](
     val config: PipelineConfig[A],
@@ -407,22 +439,84 @@ final class RunningPipeline[A](
     counters: StageCounters,
     private[graft] val progressTotals: ProgressTotals,
     /** Source descriptors (the producer_names/1 analog). */
-    val producerNames: Seq[String] = Seq.empty
+    val producerNames: Seq[String],
+    /** Builds and starts a fresh run: used to restart after a crash. */
+    rebuild: () => StreamingQuery
 ) {
-  private val queryRef = new java.util.concurrent.atomic.AtomicReference[StreamingQuery](initialQuery)
+  private val queryRef = new AtomicReference[StreamingQuery](initialQuery)
 
-  /** The live query — replaced in place by the Supervisor on restart. */
+  /** The run whose crash is not claimed yet; null while a restart runs. */
+  private val watched = new AtomicReference[UUID](null)
+  @volatile private var cancelled = false
+  @volatile private var restarts = 0
+  @volatile private var gaveUpFlag = false
+  /** Restart times in the policy's window. Only the restart thread touches
+    * it, and one restart runs at a time: the next claim needs the run that
+    * this restart started.
+    */
+  private val restartTimes = mutable.ArrayDeque.empty[Long]
+
+  /** The live query — replaced in place on restart. */
   def query: StreamingQuery = queryRef.get()
 
-  private[graft] def replaceQuery(q: StreamingQuery): Unit = queryRef.set(q)
-
   def name: String = config.name
+
+  /** Completed restarts of this pipeline. */
+  def restartCount: Int = restarts
+
+  /** True once the restart budget was spent (or a rebuild failed): the
+    * pipeline is down for good.
+    */
+  def gaveUp: Boolean = gaveUpFlag
+
+  /** Watch `q`, the live run, for a crash. It may already have crashed
+    * before this call, with its terminated event gone by: re-check.
+    */
+  private[graft] def watch(q: StreamingQuery): Unit = {
+    watched.set(q.runId)
+    if (!q.isActive && q.exception.isDefined) crashed(q.runId)
+  }
+
+  /** The run `runId` crashed: claim it once and restart off the bus. */
+  private[graft] def crashed(runId: UUID): Unit =
+    if (watched.compareAndSet(runId, null)) {
+      val t = new Thread(() => restart(), s"graft-restart-$name")
+      t.setDaemon(true)
+      t.start()
+    }
+
+  private def restart(): Unit = if (!cancelled) {
+    val policy = config.restartPolicy.get
+    val now = System.currentTimeMillis()
+    restartTimes.removeHeadWhile(_ < now - policy.withinSeconds * 1000L)
+    if (restartTimes.size >= policy.maxRestarts) giveUp()
+    else {
+      restartTimes.append(now)
+      try {
+        val q = rebuild()
+        if (cancelled) q.stop() // lost the race against stop(): no resurrection
+        else {
+          queryRef.set(q)
+          restarts += 1
+          // a stop() between the check above and the swap read the old,
+          // dead query: the fresh run is ours to stop
+          if (cancelled) q.stop() else watch(q)
+        }
+      } catch {
+        case NonFatal(_) => giveUp()
+      }
+    }
+  }
+
+  private def giveUp(): Unit = {
+    gaveUpFlag = true
+    release()
+  }
 
   def processAllAvailable(): Unit = query.processAllAvailable()
 
   /** Graceful drain + stop within the shutdown budget (default 30 s,
-    * options.ex:13-20). Supervision is dropped first so an intentional
-    * stop never races a restart.
+    * options.ex:13-20). No restart follows an intentional stop.
     */
   def stop(): Unit = stop(StopReason.Normal, config.shutdownBudgetMs)
 
@@ -442,17 +536,11 @@ final class RunningPipeline[A](
   def stop(reason: StopReason, timeoutMs: Long): Unit = {
     val graceful = reason != StopReason.Kill
     if (graceful) config.prepareForDraining()
-    // Set the cancel flag BEFORE settling on which query to stop (forget
-    // adds the name to cancelledNames first): a restart that swaps in a
-    // fresh query AFTER the re-read below sees the flag at its
-    // post-registration check and kills the fresh run itself; a swap that
-    // completed BEFORE is exactly the query the re-read returns. Reading
-    // the query first (the original order) left a window where stop()
-    // tore down an already-replaced dead query and the fresh run survived
-    // as a zombie. The second forget is a no-op when nothing swapped.
-    graft.runtime.Supervisor.forget(name, query.runId)
+    // Cancel restarts BEFORE reading the query: a restart that swaps in a
+    // fresh run after this read sees the flag and stops that run itself;
+    // one that swapped before is the run read here.
+    cancelled = true
     val q = query
-    graft.runtime.Supervisor.forget(name, q.runId)
     try { if (graceful) q.processAllAvailable() }
     finally {
       // On a query that already crashed, processAllAvailable/awaitTermination
@@ -478,7 +566,7 @@ final class RunningPipeline[A](
 
   /** Release the runtime resources: the rate limiter, the progress
     * listener (once the last run's events are in) and the registry entry.
-    * Run by `stop()` and by a Supervisor that gives up.
+    * Run by `stop()` and by a restart that gives up.
     */
   private[graft] def release(): Unit = {
     rateLimiter.foreach(_.shutdown())

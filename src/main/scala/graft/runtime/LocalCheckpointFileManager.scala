@@ -5,7 +5,7 @@ import java.nio.file.{FileSystemException, Files, Paths, StandardCopyOption, Sta
 import java.nio.file.{FileAlreadyExistsException => NioFileAlreadyExistsException}
 import java.util.UUID
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FSDataInputStream, FileAlreadyExistsException, FileStatus, Path, PathFilter, UnsupportedFileSystemException}
+import org.apache.hadoop.fs.{FSDataInputStream, FileAlreadyExistsException, FileContext, FileStatus, FileSystem, Path, PathFilter, UnsupportedFileSystemException}
 import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager, FileContextBasedCheckpointFileManager, FileSystemBasedCheckpointFileManager}
 import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.CancellableFSDataOutputStream
 
@@ -34,8 +34,8 @@ import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileMana
   *    checkpoint. On a filesystem without hard links it falls back to
   *    Hadoop's own check-then-rename.
   * `cancel` deletes the temp file. Like Hadoop's local filesystem, no
-  * write is fsynced. `mkdirs` on a `file:` path is java.nio's
-  * `createDirectories`.
+  * write is fsynced. `mkdirs` and `createCheckpointDirectory` on a `file:`
+  * path are java.nio's `createDirectories`.
   */
 class LocalCheckpointFileManager(path: Path, hadoopConf: Configuration) extends CheckpointFileManager {
 
@@ -104,6 +104,17 @@ class LocalCheckpointFileManager(path: Path, hadoopConf: Configuration) extends 
   override def exists(p: Path): Boolean = delegate.exists(p)
   override def delete(p: Path): Unit = delegate.delete(p)
   override def isLocal: Boolean = delegate.isLocal
-  override def createCheckpointDirectory(): Path = delegate.createCheckpointDirectory()
+  /** On a `file:` path (the default filesystem's, when `path` has no
+    * scheme), java.nio, returning `path` qualified as Spark's manager
+    * qualifies it.
+    */
+  override def createCheckpointDirectory(): Path =
+    if (Option(path.toUri.getScheme).getOrElse(FileSystem.getDefaultUri(hadoopConf).getScheme) != "file")
+      delegate.createCheckpointDirectory()
+    else {
+      val qualified = FileContext.getLocalFSFileContext(hadoopConf).makeQualified(path)
+      mkdirs(qualified)
+      qualified
+    }
   override def close(): Unit = delegate.close()
 }

@@ -17,15 +17,19 @@ import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener}
   * counts, per-phase sums over Spark's fixed set of `durationMs` keys, and
   * peaks.
   *
-  * It follows one run at a time (a Supervisor restart is a new run), added
-  * to the query's own session: listener events are per-session. Lifecycle:
+  * It follows one run at a time (a restart is a new run), added to the
+  * query's own session: listener events are per-session. Lifecycle:
   *  - a clean termination of the followed run detaches it;
-  *  - a crash keeps it, so a restarted run is followed;
+  *  - a crash keeps it, so a restarted run is followed, and calls
+  *    [[onCrash]] with the crashed run's id;
   *  - [[close]] detaches it once the followed run's terminated event has
   *    been delivered, without waiting for it.
   * Spark posts a run's last progress event before its terminated event, on
   * the same queue, so once detached the totals include every batch; a
   * [[snapshot]] after `close()` waits for that (bounded).
+  *
+  * The crash hook is how a supervised pipeline learns that its run died:
+  * restart-on-crash rides on this one listener, not on a second one.
   */
 final class ProgressTotals private (session: SparkSession) extends StreamingQueryListener {
   import StreamingQueryListener._
@@ -42,6 +46,12 @@ final class ProgressTotals private (session: SparkSession) extends StreamingQuer
   private var stateRowsMax = -1L
   private var stateMemMax = -1L
   private val durations = mutable.Map.empty[String, Long]
+
+  /** Called with the run id when the followed run crashes and the totals
+    * are not closing. It runs on the session's listener bus thread, so it
+    * must not block; a no-op unless the pipeline is supervised.
+    */
+  @volatile private[graft] var onCrash: UUID => Unit = _ => ()
 
   /** Follow the next run named `name` that starts in the session. Call it
     * right before `start()`: Spark delivers a run's started event
@@ -75,11 +85,16 @@ final class ProgressTotals private (session: SparkSession) extends StreamingQuer
     }
   }
 
-  override def onQueryTerminated(e: QueryTerminatedEvent): Unit = synchronized {
-    if (e.runId == run) {
-      ended = true
-      if (closing || e.exception.isEmpty) detach()
+  override def onQueryTerminated(e: QueryTerminatedEvent): Unit = {
+    val crashed = synchronized {
+      if (e.runId != run) false
+      else {
+        ended = true
+        if (closing || e.exception.isEmpty) { detach(); false }
+        else true
+      }
     }
+    if (crashed) onCrash(e.runId)
   }
 
   /** Stop following: detach now if the followed run has ended (or none

@@ -67,10 +67,6 @@ object Sinks {
       idempotentParquet(df.filter(col("batcher") === route), rootFor(route), batchId)
     }
 
-  /** Dead-letter writer: failure rows with reason, for replay/audit. */
-  def deadLetterParquet(failed: DataFrame, root: String, batchId: Long): Unit =
-    idempotentParquet(failed, root, batchId)
-
   /** [[routedParquet]] with the manifested (atomic-publication) layout:
     * each route's slice publishes through [[manifestedParquet]] under its
     * own root, so every route gets the recommended exactly-once contract

@@ -154,4 +154,17 @@ class LocalCheckpointFileManagerSpec extends SparkSpec {
       assert(Files.isDirectory(dir.resolve("commits").resolve("x")))
     }
   }
+
+  test("createCheckpointDirectory on a local path creates it and returns Spark's qualified path") {
+    withDir { dir =>
+      // a `file:` URI and the bare path a user passes as checkpointLocation
+      val a = dir.resolve("a").resolve("ckpt")
+      val b = dir.resolve("b").resolve("ckpt")
+      Seq(a -> hpath(a), b -> new Path(b.toString)).foreach { case (local, p) =>
+        val made = new LocalCheckpointFileManager(p, conf).createCheckpointDirectory()
+        assert(Files.isDirectory(local))
+        assert(made == new FileContextBasedCheckpointFileManager(p, conf).createCheckpointDirectory())
+      }
+    }
+  }
 }
