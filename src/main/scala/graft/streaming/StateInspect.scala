@@ -36,11 +36,11 @@ object StateInspect {
     * Spark assembles the user-facing key/value view across the side's
     * paired internal stores; `storeName` addresses one internal store
     * directly when the raw layout is the question. For
-    * `transformWithState` operators (e.g. [[KeyedBatcher.incremental]]'s
-    * checkpoint) pass `stateVarName` — the processor's state variable
-    * name ("buf" for the incremental batcher's buffered messages, one row
-    * per message; "meta" for its one count/accumulator/deadline row per
-    * group); TWS stores are addressed by variable, not store name.
+    * `transformWithState` operators (e.g. [[KeyedBatcher]]'s checkpoint)
+    * pass `stateVarName` — the processor's state variable name ("buf"
+    * for the batcher's buffered messages, one row per message; "meta" for
+    * its one count/accumulator/deadline row per group); TWS stores are
+    * addressed by variable, not store name.
     */
   def stateRows(
       spark: SparkSession,
@@ -68,8 +68,8 @@ object StateInspect {
     *  - `state_bytes_est`: estimated value payload bytes per value row,
     *    summed — PHYSICAL widths, not serialization-format artifacts:
     *    binary and string fields charge their exact octet length (a
-    *    Java-serialized batcher blob ranks by its true size, not the
-    *    4/3×-inflated base64 a JSON dump would charge), fixed-width
+    *    binary state blob ranks by its true size, not the 4/3×-inflated
+    *    base64 a JSON dump would charge), fixed-width
     *    scalars their storage width, arrays of variable-width elements
     *    the sum of element octet lengths, and only residual shapes
     *    (maps, UDTs) fall back to JSON octet length. The estimate is an

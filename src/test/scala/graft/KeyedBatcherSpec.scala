@@ -2,7 +2,7 @@ package graft
 
 import java.util.concurrent.ConcurrentLinkedQueue
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 import graft.model.Message
 import graft.streaming.{EmittedBatch, KeyedBatcher}
 
@@ -13,8 +13,7 @@ object EmitProbe {
   def clear(): Unit = emitted.clear()
 }
 
-/** String-rendered probe for the `incremental` (row-encoded state) specs
-  * and the differential against `apply` (payloads are case classes there,
+/** String-rendered probe for the case-class payload specs (payloads are
   * rendered to stable strings at emit time).
   */
 object EmitProbeS {
@@ -25,19 +24,23 @@ object EmitProbeS {
 }
 
 /** The evolution pair: V2 is V1 plus an added nullable field — the
-  * payload change [[KeyedBatcher.incremental]]'s Avro-encoded list state
-  * survives across a checkpoint restart (and [[KeyedBatcher.apply]]'s
-  * Java-serialized blob does not).
+  * payload change [[KeyedBatcher]]'s Avro-encoded list state survives
+  * across a checkpoint restart.
   */
 case class PayV1(s: String)
 case class PayV2(s: String, n: Option[Long] = None)
 
+/** A payload with no product encoder (a plain class, not a case class):
+  * it reaches the batcher only through a binary encoder such as kryo.
+  */
+class Opaque(val v: Int) extends Serializable
+
 /** Streaming-state batching: size batches within and across micro-batches,
   * timeout flush of open batches (batcher_stage.ex:80-89,106-257).
   *
-  * NOTE: queries with ProcessingTimeTimeout state always "require another
-  * batch" (the timer may fire), so `processAllAvailable()` never quiesces —
-  * these specs poll the probe with a deadline instead.
+  * NOTE: `transformWithState` queries in processing-time mode always
+  * "require another batch" (a timer may fire), so `processAllAvailable()`
+  * never quiesces — these specs poll the probe with a deadline instead.
   */
 class KeyedBatcherSpec extends SparkSpec {
 
@@ -229,59 +232,29 @@ class KeyedBatcherSpec extends SparkSpec {
     } finally query.stop()
   }
 
-  test("legacy (buffer, acc) checkpoint blobs migrate instead of ClassCastException") {
-    // The state blob grew a third field (absolute deadline) with the
-    // trickle-starvation fix; a checkpoint written before that commit must
-    // restore with the clock restarted at recovery, not crash the query.
-    def javaSer(o: AnyRef): Array[Byte] = {
-      val bos = new java.io.ByteArrayOutputStream()
-      val oos = new java.io.ObjectOutputStream(bos)
-      oos.writeObject(o); oos.close(); bos.toByteArray
-    }
-    val msgs = Vector(Message(7, metadata = Map("seq" -> "1")))
-    val legacy = javaSer((msgs, 42L)) // pre-deadline Tuple2 shape
-    val (buf, acc, deadline) = KeyedBatcher.deserialize[Int](legacy, fallbackDeadline = 9999L)
-    assert(buf.map(_.data) == Seq(7))
-    assert(acc == 42L)
-    assert(deadline == 9999L, "migrated open batch must restart its clock at the fallback")
-    // current shape round-trips unchanged
-    val cur = javaSer((msgs, 42L, 123L))
-    assert(KeyedBatcher.deserialize[Int](cur, fallbackDeadline = 0L) == ((msgs, 42L, 123L)))
-    // anything else fails loudly with the shape named
-    val bad = intercept[IllegalStateException](KeyedBatcher.deserialize[Int](javaSer("junk"), 0L))
-    assert(bad.getMessage.contains("state shape"))
-  }
-
   test("non-positive batch size or timeout is rejected like PipelineConfig.validate") {
     implicit val sql: org.apache.spark.sql.SQLContext = spark.sqlContext
     val ds = MemoryStream[Message[PayV1]].toDS()
-    val mks: Seq[(Int, Long) => Any] = Seq(
-      (bs, to) => KeyedBatcher(ds, batchSize = bs, batchTimeoutMs = to),
-      (bs, to) => KeyedBatcher.incremental(ds, batchSize = bs, batchTimeoutMs = to))
-    mks.foreach { mk =>
-      assert(intercept[IllegalArgumentException](mk(0, 1000L)).getMessage
-        .contains("batch_size must be positive"))
-      assert(intercept[IllegalArgumentException](mk(10, 0L)).getMessage
-        .contains("batch_timeout must be positive"))
-    }
+    assert(intercept[IllegalArgumentException](KeyedBatcher(ds, batchSize = 0, batchTimeoutMs = 1000L))
+      .getMessage.contains("batch_size must be positive"))
+    assert(intercept[IllegalArgumentException](KeyedBatcher(ds, batchSize = 10, batchTimeoutMs = 0L))
+      .getMessage.contains("batch_timeout must be positive"))
     // a splitter replaces the size budget, so batchSize is then unused
     val sp = graft.config.BatchSplitter[PayV1](0L, (_, acc) => (false, acc))
     KeyedBatcher(ds, batchSize = 0, splitter = Some(sp))
   }
 
   test("incremental: ADDING a payload field between checkpoint and resume still drains the open batch") {
-    // The upgrade apply()'s Java-ser state cannot make: state written with
-    // Message[PayV1] is read back by a query compiled against
-    // Message[PayV2] (one added nullable field) — Avro-encoded state
-    // evolves the schema, old rows null-fill the new field, and the
-    // buffered batch drains. With the blob backend this restart dies on
-    // serialVersionUID mismatch ("keep A binary-stable or drain").
+    // State written with Message[PayV1] is read back by a query compiled
+    // against Message[PayV2] (one added nullable field) — Avro-encoded
+    // state evolves the schema, old rows null-fill the new field, and the
+    // buffered batch drains.
     EmitProbeS.clear()
     implicit val sql: org.apache.spark.sql.SQLContext = spark.sqlContext
     val checkpoint = tempDir("graft-evolve").toString
 
     val s1 = MemoryStream[Message[PayV1]]
-    val batches1 = KeyedBatcher.incremental(s1.toDS(), batchSize = 10, batchTimeoutMs = 600000)
+    val batches1 = KeyedBatcher(s1.toDS(), batchSize = 10, batchTimeoutMs = 600000)
     // changelog checkpointing binds on the batcher's cloned session only
     val changelog = "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
     assert(batches1.sparkSession.conf.get(changelog) == "true")
@@ -315,7 +288,7 @@ class KeyedBatcherSpec extends SparkSpec {
     // an engine concern)
     val s2 = MemoryStream[Message[PayV2]]
     s2.addData(Seq.empty[Message[PayV2]])
-    val q2 = KeyedBatcher.incremental(s2.toDS(), batchSize = 10, batchTimeoutMs = 600000).writeStream
+    val q2 = KeyedBatcher(s2.toDS(), batchSize = 10, batchTimeoutMs = 600000).writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.ProcessingTime(100))
@@ -340,40 +313,14 @@ class KeyedBatcherSpec extends SparkSpec {
     } finally q2.stop()
   }
 
-  test("incremental: same size/timeout semantics on list state (shared foldGroup core)") {
-    EmitProbeS.clear()
-    implicit val sql: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val stream = MemoryStream[Message[PayV1]]
-    val batches = KeyedBatcher.incremental(stream.toDS(), batchSize = 10, batchTimeoutMs = 300)
-    val query = batches.writeStream
-      .outputMode("append")
-      .trigger(Trigger.ProcessingTime(100))
-      .foreachBatch { (ds: org.apache.spark.sql.Dataset[EmittedBatch[PayV1]], _: Long) =>
-        ds.collect().foreach { b =>
-          EmitProbeS.emitted.add((b.trigger, b.messages.map(_.data.s)))
-        }
-        ()
-      }
-      .start()
-    try {
-      stream.addData((1 to 15).map(i => Message(PayV1(s"m$i"), metadata = Map("seq" -> i.toString))))
-      val deadline = System.currentTimeMillis() + 20000
-      var got = Seq.empty[(String, Seq[String])]
-      while (got.size < 2 && System.currentTimeMillis() < deadline) {
-        Thread.sleep(100); got = got ++ EmitProbeS.drain()
-      }
-      assert(got.size == 2, s"expected size+timeout batches, got $got")
-      assert(got.head._1 == "size" && got.head._2 == (1 to 10).map(i => s"m$i"))
-      assert(got(1)._1 == "timeout" && got(1)._2 == (11 to 15).map(i => s"m$i"))
-    } finally query.stop()
-  }
-
   test("incremental == apply: deterministic differential across keys, flush modes, and wave splits") {
-    // Same message sequence (3 batch keys, interleaved, flush messages,
-    // size boundaries straddling waves) through BOTH state backends with
-    // an unreachable timeout — emitted batches must be identical per key,
-    // in order, trigger included. The append fast path must be invisible
-    // in the output; apply's whole-buffer fold is the reference.
+    // The message sequence (3 batch keys, interleaved, flush messages,
+    // size boundaries straddling waves) runs through KeyedBatcher in three
+    // waves with an unreachable timeout. The reference is the pure
+    // foldGroup, run offline per batch key over the same messages in seq
+    // order (where the waves split cannot change it: SplitterPropSpec's
+    // wave-split property). Emitted batches must be identical per key, in
+    // order, trigger included — the append fast path must be invisible.
     implicit val sql: org.apache.spark.sql.SQLContext = spark.sqlContext
     val msgs = (1 to 60).map { i =>
       Message(
@@ -382,50 +329,46 @@ class KeyedBatcherSpec extends SparkSpec {
         batchKey = s"k${i % 3}",
         batchMode = if (i % 17 == 0) graft.model.BatchMode.Flush else graft.model.BatchMode.Bulk)
     }
-    def run(
-        mk: org.apache.spark.sql.Dataset[Message[PayV1]] => org.apache.spark.sql.Dataset[EmittedBatch[PayV1]]
-    ): Seq[(String, String, Seq[String])] = {
-      val out = new ConcurrentLinkedQueue[(String, String, Seq[String])]()
-      val s = MemoryStream[Message[PayV1]]
-      val q = mk(s.toDS()).writeStream
-        .outputMode("append")
-        .trigger(Trigger.ProcessingTime(50))
-        .foreachBatch { (ds: org.apache.spark.sql.Dataset[EmittedBatch[PayV1]], _: Long) =>
-          ds.collect().foreach(b => out.add((b.batchKey, b.trigger, b.messages.map(_.data.s))))
-          ()
-        }
-        .start()
-      try {
-        msgs.grouped(20).foreach { wave =>
-          s.addData(wave)
-          val target = out.size // just ensure progress; emissions counted below
-          val deadline = System.currentTimeMillis() + 20000
-          while (q.recentProgress.map(_.numInputRows).sum <
-            msgs.indexOf(wave.last) + 1 && System.currentTimeMillis() < deadline)
-            Thread.sleep(50)
-          assert(target >= 0)
-        }
-        Thread.sleep(500)
-      } finally q.stop()
-      Iterator.continually(out.poll()).takeWhile(_ != null).toSeq
-        .sortBy(b => (b._1, b._3.head.drop(1).toInt))
-    }
-    val ref = run(ds => KeyedBatcher(ds, batchSize = 7, batchTimeoutMs = 600000))
-    val inc = run(ds => KeyedBatcher.incremental(ds, batchSize = 7, batchTimeoutMs = 600000))
+    def order(bs: Seq[(String, String, Seq[String])]) = bs.sortBy(b => (b._1, b._3.head.drop(1).toInt))
+    val out = new ConcurrentLinkedQueue[(String, String, Seq[String])]()
+    val s = MemoryStream[Message[PayV1]]
+    val q = KeyedBatcher(s.toDS(), batchSize = 7, batchTimeoutMs = 600000).writeStream
+      .outputMode("append")
+      .trigger(Trigger.ProcessingTime(50))
+      .foreachBatch { (ds: org.apache.spark.sql.Dataset[EmittedBatch[PayV1]], _: Long) =>
+        ds.collect().foreach(b => out.add((b.batchKey, b.trigger, b.messages.map(_.data.s))))
+        ()
+      }
+      .start()
+    try {
+      msgs.grouped(20).foreach { wave =>
+        s.addData(wave)
+        val deadline = System.currentTimeMillis() + 20000
+        while (q.recentProgress.map(_.numInputRows).sum <
+          msgs.indexOf(wave.last) + 1 && System.currentTimeMillis() < deadline)
+          Thread.sleep(50)
+      }
+      Thread.sleep(500)
+    } finally q.stop()
+    val inc = order(Iterator.continually(out.poll()).takeWhile(_ != null).toSeq)
+    val ref = order(msgs.groupBy(_.batchKey).toSeq.flatMap { case (k, ms) =>
+      KeyedBatcher.foldGroup("default", k, None, 0L, ms, batchSize = 7,
+        batchTimeoutMs = 600000L, splitter = None)._1
+        .map(b => (b.batchKey, b.trigger, b.messages.map(_.data.s)))
+    })
     assert(ref.nonEmpty, "differential is vacuous — nothing emitted")
-    assert(inc == ref, s"backends diverged:\napply=$ref\nincremental=$inc")
+    assert(inc == ref, s"list state diverged from foldGroup:\nfoldGroup=$ref\nKeyedBatcher=$inc")
   }
 
   test("incremental: buffered rows are per-message list state, inspectable and restart-drainable") {
     // One open group of 6 messages: StateInspect over stateVarName "buf"
-    // must see SIX rows (one per buffered message — the inspectability
-    // the blob/row backends cannot give), and a RESTART against the same
+    // must see SIX rows (one per buffered message), and a RESTART against the same
     // checkpoint must drain the buffer intact on timeout.
     EmitProbeS.clear()
     implicit val sql: org.apache.spark.sql.SQLContext = spark.sqlContext
     val checkpoint = tempDir("graft-inc-inspect").toString
     val s1 = MemoryStream[Message[PayV1]]
-    val q1 = KeyedBatcher.incremental(s1.toDS(), batchSize = 100, batchTimeoutMs = 600000)
+    val q1 = KeyedBatcher(s1.toDS(), batchSize = 100, batchTimeoutMs = 600000)
       .writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
@@ -469,7 +412,7 @@ class KeyedBatcherSpec extends SparkSpec {
     val s2 = MemoryStream[Message[PayV1]]
     s2.addData(Seq.empty[Message[PayV1]])
     s2.addData(Seq.empty[Message[PayV1]])
-    val q2 = KeyedBatcher.incremental(s2.toDS(), batchSize = 7, batchTimeoutMs = 600000)
+    val q2 = KeyedBatcher(s2.toDS(), batchSize = 7, batchTimeoutMs = 600000)
       .writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
@@ -493,12 +436,16 @@ class KeyedBatcherSpec extends SparkSpec {
   }
 
   test("hotKeys byte estimate tracks ACTUAL checkpoint state-file growth for binary-blob values") {
-    // Java-ser KeyedBatcher state is one binary field per open group —
-    // the value shape a JSON-length estimate inflates by 4/3 (base64)
-    // plus framing. The physical estimator charges the blob's exact
-    // octet length, so the estimate's DELTA between a narrow-payload run
-    // and a wide-payload run must track the checkpoint state dir's
-    // actual on-disk growth, and the wide key must top the ranking.
+    // One binary blob per group — the value shape a JSON-length estimate
+    // inflates by 4/3 (base64) plus framing. The physical estimator
+    // charges the blob's exact octet length, so the estimate's DELTA
+    // between a narrow-payload run and a wide-payload run must track the
+    // checkpoint state dir's actual on-disk growth, and the wide key must
+    // top the ranking. The blob comes from a local flatMapGroupsWithState
+    // producer on the session's default provider: KeyedBatcher's RocksDB
+    // store uploads a snapshot with its first commit beside that commit's
+    // changelog, so its state dir holds each first-batch byte twice and
+    // its growth measures the provider's layout, not the state.
     implicit val sql: org.apache.spark.sql.SQLContext = spark.sqlContext
     def du(dir: String): Long = {
       val p = java.nio.file.Paths.get(dir)
@@ -512,11 +459,20 @@ class KeyedBatcherSpec extends SparkSpec {
     }
     def run(checkpoint: String, wideA: Boolean): Unit = {
       val s = MemoryStream[Message[String]]
-      val q = KeyedBatcher(s.toDS(), batchSize = 100, batchTimeoutMs = 600000).writeStream
+      // per (batcher, batchKey): the group's payload bytes so far, one blob
+      val q = s.toDS()
+        .groupByKey((m: Message[String]) => (m.batcher, m.batchKey))
+        .flatMapGroupsWithState[Array[Byte], Int](OutputMode.Append(), GroupStateTimeout.NoTimeout) {
+          (_: (String, String), it: Iterator[Message[String]], st: GroupState[Array[Byte]]) =>
+            st.update(st.getOption.getOrElse(Array.emptyByteArray) ++
+              it.flatMap(_.data.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
+            Iterator.empty
+        }
+        .writeStream
         .outputMode("append")
         .option("checkpointLocation", checkpoint)
         .trigger(Trigger.ProcessingTime(100))
-        .foreachBatch { (ds: org.apache.spark.sql.Dataset[EmittedBatch[String]], _: Long) =>
+        .foreachBatch { (ds: org.apache.spark.sql.Dataset[Int], _: Long) =>
           ds.collect() // consume every partition (commit validation); nothing emits here
           ()
         }
@@ -555,7 +511,7 @@ class KeyedBatcherSpec extends SparkSpec {
     assert(top.length == 2 && top.head.getAs[String]("_2") == "a",
       s"wide-blob key must rank first by bytes: ${top.toSeq}")
     assert(top.head.getAs[Long]("state_rows") == top(1).getAs[Long]("state_rows"),
-      "precondition: both keys hold ONE open group — only bytes separate them")
+      "precondition: both keys hold ONE blob — only bytes separate them")
     // growth attribution: estimate delta vs actual state-file growth
     // (identical runs except the payload width, so per-run provider
     // overhead cancels in the delta)
@@ -625,6 +581,96 @@ class KeyedBatcherSpec extends SparkSpec {
       stream.addData(Seq(Message(4, metadata = Map("seq" -> "4"), batchMode = "flush")))
       val next = awaitEmitted(atLeast = 1)
       assert(next == Seq(("default", "default", "flush", Seq(3, 4))), s"new batch wrong: $next")
+    } finally query.stop()
+  }
+
+  test("an open batch registers its timeout timer once, not on every append") {
+    // Spark's TimerStateImpl.registerTimer reads state to look the timer
+    // up and logs a WARN "... since it already exists" when it finds it,
+    // so re-registering an open batch's unchanged deadline on every
+    // append costs a state read and a log line per group per trigger.
+    // Three append-only waves into one open group must log no such line,
+    // and the one timer registered when the batch opened still flushes it.
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.{Configurator, Property}
+    EmitProbe.clear()
+    implicit val sql: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val timerLog = "org.apache.spark.sql.execution.streaming.operators.stateful." +
+      "transformwithstate.timers.TimerStateImpl"
+    val warnings = new ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("timer-warnings", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = { warnings.add(e.getMessage.getFormattedMessage); () }
+    }
+    appender.start()
+    val logger = LogManager.getLogger(timerLog).asInstanceOf[Logger]
+    val priorLevel = logger.getLevel
+    logger.addAppender(appender)
+    Configurator.setLevel(timerLog, Level.WARN)
+    // the capture is live: a WARN on the timer logger reaches it
+    LogManager.getLogger(timerLog).warn("probe")
+    assert(warnings.poll() == "probe", "appender does not see the timer logger's WARN lines")
+    val stream = MemoryStream[Message[Int]]
+    val query = KeyedBatcher(stream.toDS(), batchSize = 100, batchTimeoutMs = 6000,
+      statePartitions = Some(1)).writeStream
+      .outputMode("append")
+      .trigger(Trigger.ProcessingTime(100))
+      .foreachBatch { (ds: org.apache.spark.sql.Dataset[EmittedBatch[Int]], _: Long) =>
+        ds.collect().foreach { b =>
+          EmitProbe.emitted.add((b.batcher, b.batchKey, b.trigger, b.messages.map(_.data)))
+        }
+        ()
+      }
+      .start()
+    try {
+      def consumed(): Long = query.recentProgress.map(_.numInputRows).sum
+      val deadline = System.currentTimeMillis() + 60000
+      (0 until 3).foreach { w =>
+        stream.addData((1 to 3).map(i => 3 * w + i).map(i => Message(i, metadata = Map("seq" -> i.toString))))
+        while (consumed() < 3 * (w + 1) && System.currentTimeMillis() < deadline) Thread.sleep(50)
+      }
+      assert(consumed() == 9, s"the three waves were not consumed: ${consumed()}")
+      val again = warnings.toArray.toSeq.map(_.toString).filter(_.contains("already exists"))
+      assert(again.isEmpty, s"the open batch's timer was registered again: $again")
+      val out = awaitEmitted(atLeast = 1)
+      assert(out == Seq(("default", "default", "timeout", 1 to 9)), s"timeout did not flush the batch: $out")
+    } finally {
+      query.stop()
+      logger.removeAppender(appender)
+      Configurator.setLevel(timerLog, priorLevel)
+    }
+  }
+
+  test("opaque payloads buffer across a micro-batch and emit by size through kryo encoders") {
+    // Opaque has no product encoder: Message[Opaque] and
+    // EmittedBatch[Opaque] are kryo-encoded, so the list state holds one
+    // binary value per buffered message.
+    implicit val sql: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val msgEnc = org.apache.spark.sql.Encoders.kryo[Message[Opaque]]
+    val outEnc = org.apache.spark.sql.Encoders.kryo[EmittedBatch[Opaque]]
+    val out = new ConcurrentLinkedQueue[(String, Seq[Int])]()
+    val stream = MemoryStream[Message[Opaque]](msgEnc, sql)
+    val query = KeyedBatcher(stream.toDS(), batchSize = 5, batchTimeoutMs = 600000)(msgEnc, outEnc)
+      .writeStream
+      .outputMode("append")
+      .trigger(Trigger.ProcessingTime(100))
+      .foreachBatch { (ds: org.apache.spark.sql.Dataset[EmittedBatch[Opaque]], _: Long) =>
+        ds.collect().foreach(b => out.add((b.trigger, b.messages.map(_.data.v))))
+        ()
+      }
+      .start()
+    def msgs(r: Range) = r.map(i => Message(new Opaque(i), metadata = Map("seq" -> i.toString)))
+    try {
+      def consumed(): Long = query.recentProgress.map(_.numInputRows).sum
+      val deadline = System.currentTimeMillis() + 60000
+      stream.addData(msgs(1 to 3))
+      while (consumed() < 3 && System.currentTimeMillis() < deadline) Thread.sleep(50)
+      assert(consumed() == 3, "the first wave was not consumed")
+      assert(out.isEmpty, s"3 of 5 messages emitted early: $out")
+      stream.addData(msgs(4 to 6))
+      while (out.isEmpty && System.currentTimeMillis() < deadline) Thread.sleep(50)
+      assert(out.toArray.toSeq == Seq(("size", 1 to 5)), s"size batch wrong: ${out.toArray.toSeq}")
     } finally query.stop()
   }
 }

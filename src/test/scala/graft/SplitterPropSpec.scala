@@ -53,13 +53,14 @@ object SplitterPropSpec extends Properties("BatchSplitter") {
       out.lastOption.forall(_._1.size <= 7)
     }
 
-  // ---- incremental backend's pre-decision vs the shared fold ----------
+  // ---- list-state backend's pre-decision vs the shared fold -----------
   // appendOnlyAcc is the ONE piece of emission-decision logic
-  // KeyedBatcher.incremental reimplements (everything else routes through
-  // foldGroup): for ANY reachable open state and ANY incoming slice —
-  // flush modes, splitter or fixed size, overdue or live deadline — it
-  // must return Some(acc) exactly when foldGroup emits nothing, with acc
-  // equal to the fold's accumulator and the state equal to append-only.
+  // KeyedBatcher's list-state backend reimplements (everything else
+  // routes through foldGroup): for ANY reachable open state and ANY
+  // incoming slice — flush modes, splitter or fixed size, overdue or
+  // live deadline — it must return Some(acc) exactly when foldGroup emits
+  // nothing, with acc equal to the fold's accumulator and the state equal
+  // to append-only.
   private val flushyMsgsGen: Gen[List[Message[Int]]] =
     Gen.listOf(Gen.zip(Gen.chooseNum(1, 9), Gen.prob(0.15)).map { case (i, fl) =>
       Message(i, batchMode = if (fl) graft.model.BatchMode.Flush else graft.model.BatchMode.Bulk)
